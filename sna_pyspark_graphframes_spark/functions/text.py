@@ -37,10 +37,6 @@ def token_count(col: Column) -> Column:
     return F.size(F.regexp_extract_all(col, F.lit(TOKEN_RE), F.lit(0)))
 
 
-def word_count(col: Column) -> Column:
-    return F.size(tokens(col))
-
-
 def _stopword_pattern(words: list[str]) -> str:
     return r"\b(" + "|".join(words) + r")\b"
 

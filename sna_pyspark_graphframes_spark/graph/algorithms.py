@@ -124,7 +124,7 @@ def _adaptive_edge_parts(n_rows: int, spark) -> int:
 
 
 def _edges_partitioned(
-    e: DataFrame, key: str, num_partitions: int | None = None
+    e: DataFrame, key: str, num_partitions: int | None = None, dedup: bool = True
 ) -> DataFrame:
     """Iterative-loop edge layout (r7): dedup + hash-partition on ``key``
     + persist in the cache layer. One upfront shuffle — dropDuplicates'
@@ -145,32 +145,18 @@ def _edges_partitioned(
     ``count()`` of ``e`` before the layout shuffle — once per layout
     build, amortized over every superstep of every consumer; callers on
     a 100 TB graph that know |E| should pass ``num_partitions``
-    explicitly and skip that pass."""
+    explicitly and skip that pass.
+
+    ``dedup=False`` keeps parallel edges (``pagerank_weighted``: they
+    carry distinct weights)."""
     from pyspark import StorageLevel
 
     if num_partitions is None:
         num_partitions = _adaptive_edge_parts(e.count(), e.sparkSession)
-    return (
-        e.repartition(num_partitions, key)
-        .dropDuplicates(["src", "dst"])
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-
-
-def _sym_by(edges: DataFrame, key: str) -> DataFrame:
-    """Symmetrized edges, hash-partitioned on ``key`` and cached — the
-    CLUSTER-mode variant of ``checkpointed(_sym(edges))`` for iterative
-    loops: the cached frame reports its outputPartitioning, so each
-    superstep's join shuffles only the (small) per-vertex state table, not
-    |E|. The r4 measurement of this exact helper was net-negative on local
-    mode (the extra repartition+cache cost more than the local-disk
-    shuffle it saved) — but that loop's aggregate did NOT key on the
-    partition column. When it does, the layout also elides the per-round
-    aggregate exchange and wins even locally: label_propagation's
-    ``edge_layout="partitioned"`` (6.37 → 4.70 s at sf0.1, REPORT.md r7)
-    is this helper fused with a clustering-compatible dedup. Prefer that
-    shape (repartition BEFORE dropDuplicates) for new loops."""
-    return _sym(edges).repartition(key).cache()
+    e = e.repartition(num_partitions, key)
+    if dedup:
+        e = e.dropDuplicates(["src", "dst"])
+    return e.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 # ---------------------------------------------------------------------------
@@ -1038,6 +1024,282 @@ def core_numbers_hindex(edges: DataFrame, max_iter: int = 100) -> DataFrame:
 # PageRank
 # ---------------------------------------------------------------------------
 
+def _pagerank_loop(
+    edges: DataFrame,
+    damping: float,
+    max_iter: int,
+    directed: bool,
+    tol: float | None,
+    sym_layout: DataFrame | None = None,
+    round_dp: int | None = None,
+    init_ranks: DataFrame | None = None,
+    sources: list[int] | None = None,
+    weight_col: str | None = None,
+) -> DataFrame:
+    """The one power-iteration loop behind :func:`pagerank`,
+    :func:`personalized_pagerank` and :func:`pagerank_weighted` (GraphX's
+    shape: one superstep loop, only the vertex program varies). It owns
+    the layout, the base/out-degree frame, the empty-graph guard, the
+    ``init_ranks`` resolution, the checkpoint cadence, the dangling-mass
+    driver scalar, the L1 ``tol`` exit, the final materialization and the
+    unpersist. Two inputs vary:
+
+    * teleport — ``sources=None``: uniform 1/N,
+      ``(1-d)/N + d·(inflow + dm/N)``; else a reset vector ``r`` uniform
+      over ``sources``, ``((1-d) + d·dm)·r + d·inflow`` (dangling mass
+      returns to the sources). Ids absent from ``init_ranks`` start at
+      1/N resp. 0.0.
+    * edge weight — ``weight_col=None``: unit weight on the deduped
+      layout; else the weight column on a layout WITHOUT the dedup
+      (parallel edges are weights) and out-strength Σw as ``out_deg``.
+      ``pr·w/s`` with w ≡ 1.0 equals ``pr/out_deg`` exactly (x·1.0 is
+      exact in IEEE-754), so the unit path skips the multiply.
+
+    Both update expressions keep the floating-point order the
+    unrolled-CTE oracles replay with per-round 6-dp rounding.
+    """
+    # dst-partitioned persistent layout: the per-round contribution
+    # aggregate groups by dst, so its exchange is elided every round (see
+    # _edges_partitioned). A/B'd at sf0.1 (REPORT.md r7): median 8.62 →
+    # 7.53 s, new layout faster in every warmed rep despite running first
+    # in each alternating pair.
+    owns_layout = sym_layout is None
+    if not owns_layout:
+        # Shared SRC-partitioned symmetric layout (the CC/LPA frame,
+        # VERDICT r7 Next #7): a symmetric edge set is invariant under
+        # swapping the column names, and the swap re-keys the SAME
+        # persisted frame by what this loop calls dst — the per-round
+        # contribution aggregate stays exchange-free without a second
+        # |E| repartition+persist. Undirected only (a symmetric layout
+        # has no direction to preserve). ValueError, not assert: under
+        # ``python -O`` an assert is stripped and a directed=True call
+        # would silently return undirected ranks (ADVICE r8).
+        if directed:
+            raise ValueError("sym_layout requires directed=False")
+        e = sym_layout.select(
+            F.col("dst").alias("src"), F.col("src").alias("dst")
+        ).filter(F.col("src") != F.col("dst"))
+    elif weight_col is None:
+        e = (
+            edges.select("src", "dst")
+            if directed
+            else symmetrize(edges, dedup=False)
+        )
+        e = _edges_partitioned(e.filter(F.col("src") != F.col("dst")), "dst")
+    else:
+        e = edges.select(
+            "src", "dst", F.col(weight_col).cast("double").alias("w")
+        )
+        if not directed:
+            e = e.unionByName(
+                e.select(
+                    F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
+                )
+            )
+        e = _edges_partitioned(
+            e.filter(F.col("src") != F.col("dst")), "dst", dedup=False
+        )
+    vertices = (
+        e.select(F.col("src").alias("id"))
+        .union(e.select(F.col("dst").alias("id")))
+        .distinct()
+    )
+    out_deg = e.groupBy(F.col("src").alias("id")).agg(
+        (F.count("*") if weight_col is None else F.sum("w")).alias("out_deg")
+    )
+    base = vertices
+    if sources is not None:
+        src_df = e.sparkSession.createDataFrame(
+            [(int(s),) for s in set(sources)], "id long"
+        ).withColumn("r", F.lit(1.0 / len(set(sources))))
+        base = base.join(F.broadcast(src_df), "id", "left").fillna({"r": 0.0})
+    # ONE setup action (r9): the lazy-checkpointed base is materialized by
+    # the same aggregate that reads |V|, the dangling count and (with a
+    # reset vector) the round-0 dangling mass — the r7/r8 shape paid 4
+    # setup jobs (vertices checkpoint + count, base checkpoint, dangling
+    # count, ranks checkpoint) for the same scalars. vertices is
+    # single-consumer (the base join) so it needs no checkpoint of its
+    # own, and the initial ranks are a pure projection of the
+    # checkpointed base — no state to materialize separately.
+    base = checkpointed(
+        base.join(out_deg, "id", "left").fillna({"out_deg": 0}), lazy=True
+    )
+    is_dang = F.col("out_deg") == 0
+    setup = [F.count("*"), F.sum(is_dang.cast("int"))]
+    if sources is not None:
+        # initial ranks equal the reset vector, so the round-0 mass is the
+        # reset weight on dangling sources
+        setup.append(F.coalesce(F.sum(F.when(is_dang, F.col("r"))), F.lit(0.0)))
+    row = base.agg(*setup).first()
+    n = row[0]
+    if n == 0:
+        # empty edge frame: no vertices, no ranks — same empty-result
+        # convention as eigenvector_centrality (its ADVICE r4 fix),
+        # instead of 1.0/0 at the init.
+        if owns_layout:
+            e.unpersist(blocking=False)
+        return edges.sparkSession.createDataFrame(
+            [], "id long, pagerank double"
+        )
+    # dangling vertices (no out-edges) exist only in directed mode
+    has_danglings = directed and (row[1] or 0) > 0
+    dangling_read = F.coalesce(F.sum(F.when(is_dang, F.col("pr"))), F.lit(0.0))
+    if init_ranks is None:
+        ranks = base.withColumn(
+            "pr", F.lit(1.0 / n) if sources is None else F.col("r")
+        )
+        if not has_danglings:
+            dangling_mass = 0.0
+        elif sources is None:
+            dangling_mass = row[1] * (1.0 / n)  # round 0: ranks are uniform
+        else:
+            dangling_mass = row[2]
+    else:
+        # continuation state: resolve (id, rank) by NAME when the frame
+        # carries recognizable ones (pagerank() output plugs in
+        # directly), else by position — with validation so a frame whose
+        # first two columns are not (id, rank) is rejected instead of
+        # silently misread (ADVICE r11). Missing ids fall back to the
+        # uniform 1/N so a partial init still covers every vertex; with a
+        # reset vector they get 0.0 — restart mass concentrates on the
+        # walk's reach.
+        iid, ipr = _resolve_init_ranks(init_ranks)
+        ranks = base.join(
+            _state_hinted(
+                init_ranks.select(
+                    F.col(iid).alias("id"), F.col(ipr).alias("_ipr")
+                ),
+                n,
+            ),
+            "id",
+            "left",
+        ).select(
+            *base.columns,
+            F.coalesce(
+                "_ipr", F.lit(1.0 / n if sources is None else 0.0)
+            ).alias("pr"),
+        )
+        # provided init: the round-0 mass has no closed form — one setup
+        # action over the initial state (docstring contract)
+        dangling_mass = (
+            ranks.agg(dangling_read).first()[0] if has_danglings else 0.0
+        )
+    # Dangling mass is a driver-side SCALAR, not a broadcast frame
+    # (VERDICT r6 Next #5): it is refreshed each round from the same 1-row
+    # action that reads the convergence delta, then enters the next
+    # superstep as a literal — the old shape crossJoin(broadcast(agg))
+    # re-scanned the |V| state a second time inside every round's job and
+    # added a broadcast exchange per round. A per-round scalar requires a
+    # per-round materialization, so dangling mode pins cadence 1 (below
+    # 4M vertices _state_cadence pins 1 anyway; past that, a directed
+    # graph with danglings pays one checkpoint per round — the price of
+    # per-round-exact mass redistribution).
+    k = 1 if has_danglings else _state_cadence(n)
+    # k == 1 (broadcast-sized state / danglings — every round materializes
+    # anyway): join the update against RANKS instead of base so |Δpr|
+    # rides the superstep select and the delta is a cheap scan of the
+    # checkpointed frame — no per-round delta join (the eigenvector
+    # pattern). k > 1 (shuffle-hash state): referencing ranks twice per
+    # superstep would compound the unmaterialized plan 2^k, so keep the
+    # base-join shape and pay one delta join per CHECKPOINTED round only.
+    fold_delta = k == 1 and tol is not None
+    share = (
+        F.col("pr") / F.col("out_deg")
+        if weight_col is None
+        else F.col("pr") * F.col("w") / F.col("out_deg")
+    )
+    prev_ck = ranks  # last checkpointed state, for the k>1 delta
+    converged = False  # True ⇔ the loop broke after a materializing read
+    LAST_STATS["pagerank_rounds"] = 0
+    for it in range(max_iter):
+        LAST_STATS["pagerank_rounds"] += 1
+        contribs = (
+            e.join(_state_hinted(ranks.withColumnRenamed("id", "src"), n), "src")
+            .select(F.col("dst").alias("id"), share.alias("c"))
+            .groupBy("id")
+            .agg(F.sum("c").alias("inflow"))
+        )
+        updated = (ranks if fold_delta else base).join(contribs, "id", "left")
+        inflow = F.coalesce("inflow", F.lit(0.0))
+        if sources is None:
+            new_pr = F.lit((1.0 - damping) / n) + F.lit(damping) * (
+                inflow + F.lit(dangling_mass / n)
+            )
+        else:
+            new_pr = F.lit((1.0 - damping) + damping * dangling_mass) * F.col(
+                "r"
+            ) + F.lit(damping) * inflow
+        if round_dp is not None:
+            new_pr = F.round(new_pr, round_dp)
+        if fold_delta:
+            ranks = checkpointed(
+                updated.select(
+                    *base.columns,
+                    new_pr.alias("pr"),
+                    F.abs(new_pr - F.col("pr")).alias("d"),
+                ),
+                lazy=True,  # the delta/dangling read below materializes
+            )
+            # ONE action reads both the L1 delta and (when needed) the
+            # next round's dangling mass off the just-materialized state.
+            aggs = [F.sum("d").alias("delta")]
+            if has_danglings:
+                aggs.append(dangling_read)
+            row = ranks.agg(*aggs).first()
+            delta = row[0]
+            if has_danglings:
+                dangling_mass = row[1]
+            ranks = ranks.drop("d")
+            if it < max_iter - 1 and delta is not None and delta < tol:
+                converged = True
+                break
+            continue
+        ranks = updated.select(*base.columns, new_pr.alias("pr"))
+        if ((it + 1) % k == 0) or it == max_iter - 1:
+            # lazy: whichever comes first — the dangling/delta read below
+            # or the next superstep's state join — is the materializing
+            # action; the logical plan is truncated either way
+            ranks = checkpointed(ranks, lazy=True)
+            if has_danglings and it < max_iter - 1:
+                # tol=None path (exact-maxIter contract): the mass refresh
+                # is the round's single 1-row action
+                dangling_mass = ranks.agg(dangling_read).first()[0]
+            # L1-delta early exit: power iteration (global or personalized)
+            # is a d-contraction, so a sub-tol delta at a checkpointed
+            # round bounds all remaining movement
+            if tol is not None and it < max_iter - 1:
+                delta = (
+                    ranks.select("id", "pr")
+                    .join(
+                        _state_hinted(
+                            prev_ck.select("id", F.col("pr").alias("pp")), n
+                        ),
+                        "id",
+                    )
+                    .agg(F.sum(F.abs(F.col("pr") - F.col("pp"))))
+                    .first()[0]
+                )
+                if delta is not None and delta < tol:
+                    converged = True
+                    break
+            prev_ck = ranks
+    if not fold_delta and not converged:
+        # tol=None / cadence>1 run-to-max_iter path: the final round's
+        # lazy checkpoint got no follow-up read (dangling/delta reads are
+        # gated off the last round), so materialize it NOW — needed
+        # regardless of who owns the edge cache: with an OWNED layout the
+        # caller's first action would silently re-run the last superstep
+        # plus the layout build against the just-unpersisted frame
+        # (ADVICE r8); with a CALLER-provided sym_layout the cache stays
+        # live but the last superstep would still re-run against it on
+        # the caller's first action (ADVICE r9 — hoisted out of
+        # owns_layout).
+        ranks.agg(F.count(F.lit(1))).first()
+    if owns_layout:  # shared layouts outlive the call (caller-owned)
+        e.unpersist(blocking=False)  # ranks is materialized; cache is dead
+    return ranks.select("id", F.round(F.col("pr"), 6).alias("pagerank"))
+
+
 def pagerank(
     edges: DataFrame,
     damping: float = 0.85,
@@ -1095,217 +1357,10 @@ def pagerank(
     a provided init costs ONE extra setup action to read it off the
     initial state.
     """
-    # dst-partitioned persistent layout: the per-round contribution
-    # aggregate groups by dst, so its exchange is elided every round (see
-    # _edges_partitioned). A/B'd at sf0.1 (REPORT.md r7): median 8.62 →
-    # 7.53 s, new layout faster in every warmed rep despite running first
-    # in each alternating pair.
-    owns_layout = sym_layout is None
-    if not owns_layout:
-        # Shared SRC-partitioned symmetric layout (the CC/LPA frame,
-        # VERDICT r7 Next #7): a symmetric edge set is invariant under
-        # swapping the column names, and the swap re-keys the SAME
-        # persisted frame by what this loop calls dst — the per-round
-        # contribution aggregate stays exchange-free without a second
-        # |E| repartition+persist. Undirected only (a symmetric layout
-        # has no direction to preserve). ValueError, not assert: under
-        # ``python -O`` an assert is stripped and a directed=True call
-        # would silently return undirected ranks (ADVICE r8).
-        if directed:
-            raise ValueError("sym_layout requires directed=False")
-        e = sym_layout.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst")
-        ).filter(F.col("src") != F.col("dst"))
-    else:
-        e = (
-            edges.select("src", "dst")
-            if directed
-            else symmetrize(edges, dedup=False)
-        )
-        e = _edges_partitioned(e.filter(F.col("src") != F.col("dst")), "dst")
-    vertices = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
+    return _pagerank_loop(
+        edges, damping, max_iter, directed, tol, sym_layout, round_dp,
+        init_ranks,
     )
-    out_deg = e.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("out_deg"))
-    # ONE setup action (r9): the lazy-checkpointed base is materialized by
-    # the same aggregate that reads |V| and the dangling count — the r7/r8
-    # shape paid 4 setup jobs (vertices checkpoint + count, base
-    # checkpoint, dangling count, ranks checkpoint) for the same three
-    # scalars. vertices is single-consumer (the base join) so it needs no
-    # checkpoint of its own, and the initial ranks are a pure projection
-    # of the checkpointed base — no state to materialize separately.
-    base = checkpointed(
-        vertices.join(out_deg, "id", "left").fillna({"out_deg": 0}),
-        lazy=True,
-    )
-    row = base.agg(
-        F.count("*"), F.sum((F.col("out_deg") == 0).cast("int"))
-    ).first()
-    n = row[0]
-    if n == 0:
-        # empty edge frame: no vertices, no ranks — same empty-result
-        # convention as eigenvector_centrality (its ADVICE r4 fix),
-        # instead of 1.0/0 at the init.
-        if owns_layout:
-            e.unpersist(blocking=False)
-        return edges.sparkSession.createDataFrame(
-            [], "id long, pagerank double"
-        )
-    if init_ranks is None:
-        ranks = base.withColumn("pr", F.lit(1.0 / n))
-    else:
-        # continuation state: resolve (id, rank) by NAME when the frame
-        # carries recognizable ones (pagerank() output plugs in
-        # directly), else by position — with validation so a frame whose
-        # first two columns are not (id, rank) is rejected instead of
-        # silently misread (ADVICE r11). Missing ids fall back to
-        # uniform so a partial init still covers every vertex.
-        iid, ipr = _resolve_init_ranks(init_ranks)
-        ranks = base.join(
-            _state_hinted(
-                init_ranks.select(
-                    F.col(iid).alias("id"), F.col(ipr).alias("_ipr")
-                ),
-                n,
-            ),
-            "id",
-            "left",
-        ).select(
-            "id",
-            "out_deg",
-            F.coalesce("_ipr", F.lit(1.0 / n)).alias("pr"),
-        )
-    # dangling vertices (no out-edges) exist only in directed mode
-    n_dangling = (row[1] or 0) if directed else 0
-    has_danglings = n_dangling > 0
-    # Dangling mass is a driver-side SCALAR, not a broadcast frame
-    # (VERDICT r6 Next #5): it is refreshed each round from the same 1-row
-    # action that reads the convergence delta, then enters the next
-    # superstep as a literal — the old shape crossJoin(broadcast(agg))
-    # re-scanned the |V| state a second time inside every round's job and
-    # added a broadcast exchange per round. A per-round scalar requires a
-    # per-round materialization, so dangling mode pins cadence 1 (below
-    # 4M vertices _state_cadence pins 1 anyway; past that, a directed
-    # graph with danglings pays one checkpoint per round — the price of
-    # per-round-exact mass redistribution).
-    k = 1 if has_danglings else _state_cadence(n)
-    if init_ranks is None or not has_danglings:
-        dangling_mass = n_dangling * (1.0 / n)  # round 0: ranks are uniform
-    else:
-        # provided init: the round-0 mass has no closed form — one setup
-        # action over the initial state (docstring contract)
-        dangling_mass = (
-            ranks.agg(
-                F.coalesce(
-                    F.sum(F.when(F.col("out_deg") == 0, F.col("pr"))),
-                    F.lit(0.0),
-                )
-            ).first()[0]
-        )
-    # k == 1 (broadcast-sized state / danglings — every round materializes
-    # anyway): join the update against RANKS instead of base so |Δpr|
-    # rides the superstep select and the delta is a cheap scan of the
-    # checkpointed frame — no per-round delta join (the eigenvector
-    # pattern). k > 1 (shuffle-hash state): referencing ranks twice per
-    # superstep would compound the unmaterialized plan 2^k, so keep the
-    # base-join shape and pay one delta join per CHECKPOINTED round only.
-    fold_delta = k == 1 and tol is not None
-    prev_ck = ranks  # last checkpointed state, for the k>1 delta
-    converged = False  # True ⇔ the loop broke after a materializing read
-    LAST_STATS["pagerank_rounds"] = 0
-    for it in range(max_iter):
-        LAST_STATS["pagerank_rounds"] += 1
-        contribs = (
-            e.join(_state_hinted(ranks.withColumnRenamed("id", "src"), n), "src")
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("pr") / F.col("out_deg")).alias("c"),
-            )
-            .groupBy("id")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        updated = (ranks if fold_delta else base).join(contribs, "id", "left")
-        new_pr = F.lit((1.0 - damping) / n) + F.lit(damping) * (
-            F.coalesce("inflow", F.lit(0.0)) + F.lit(dangling_mass / n)
-        )
-        if round_dp is not None:
-            new_pr = F.round(new_pr, round_dp)
-        if fold_delta:
-            ranks = checkpointed(
-                updated.select(
-                    "id",
-                    "out_deg",
-                    new_pr.alias("pr"),
-                    F.abs(new_pr - F.col("pr")).alias("d"),
-                ),
-                lazy=True,  # the delta/dangling read below materializes
-            )
-            # ONE action reads both the L1 delta and (when needed) the
-            # next round's dangling mass off the just-materialized state.
-            aggs = [F.sum("d").alias("delta")]
-            if has_danglings:
-                aggs.append(
-                    F.sum(F.when(F.col("out_deg") == 0, F.col("pr"))).alias("dm")
-                )
-            row = ranks.agg(*aggs).first()
-            delta = row[0]
-            if has_danglings:
-                dangling_mass = row[1] or 0.0
-            ranks = ranks.drop("d")
-            if it < max_iter - 1 and delta is not None and delta < tol:
-                converged = True
-                break
-            continue
-        ranks = updated.select("id", "out_deg", new_pr.alias("pr"))
-        if ((it + 1) % k == 0) or it == max_iter - 1:
-            # lazy: whichever comes first — the dangling/delta read below
-            # or the next superstep's state join — is the materializing
-            # action; the logical plan is truncated either way
-            ranks = checkpointed(ranks, lazy=True)
-            if has_danglings and it < max_iter - 1:
-                # tol=None path (exact-maxIter contract): the mass refresh
-                # is the round's single 1-row action
-                dangling_mass = (
-                    ranks.agg(
-                        F.coalesce(
-                            F.sum(F.when(F.col("out_deg") == 0, F.col("pr"))),
-                            F.lit(0.0),
-                        )
-                    ).first()[0]
-                )
-            if tol is not None and it < max_iter - 1:
-                delta = (
-                    ranks.select("id", "pr")
-                    .join(
-                        _state_hinted(
-                            prev_ck.select("id", F.col("pr").alias("pp")), n
-                        ),
-                        "id",
-                    )
-                    .agg(F.sum(F.abs(F.col("pr") - F.col("pp"))))
-                    .first()[0]
-                )
-                if delta is not None and delta < tol:
-                    converged = True
-                    break
-            prev_ck = ranks
-    if not fold_delta and not converged:
-        # tol=None / cadence>1 run-to-max_iter path: the final round's
-        # lazy checkpoint got no follow-up read (dangling/delta reads are
-        # gated off the last round), so materialize it NOW — needed
-        # regardless of who owns the edge cache: with an OWNED layout the
-        # caller's first action would silently re-run the last superstep
-        # plus the layout build against the just-unpersisted frame
-        # (ADVICE r8); with a CALLER-provided sym_layout the cache stays
-        # live but the last superstep would still re-run against it on
-        # the caller's first action (ADVICE r9 — hoisted out of
-        # owns_layout).
-        ranks.agg(F.count(F.lit(1))).first()
-    if owns_layout:  # shared layouts outlive the call (caller-owned)
-        e.unpersist(blocking=False)  # ranks is materialized; cache is dead
-    return ranks.select("id", F.round(F.col("pr"), 6).alias("pagerank"))
 
 
 def personalized_pagerank(
@@ -1325,163 +1380,20 @@ def personalized_pagerank(
     vertices, and dangling mass returns to the sources. Ranks are the
     stationary random-walk-with-restart distribution and sum to 1.
 
-    Same loop/shuffle structure as :func:`pagerank`; the reset vector is a
-    broadcast-joined 0/1-weight column instead of a constant. ``round_dp``
-    is the same per-round reproducibility knob as :func:`pagerank`, and
-    ``init_ranks`` the same trajectory-only continuation state (missing
-    ids fall back to 0.0 here — mass concentrates on the walk's reach,
-    not uniformly; the fixed point is init-independent either way).
+    The same loop as :func:`pagerank` (:func:`_pagerank_loop`); the reset
+    vector is a broadcast-joined weight column instead of a constant.
+    ``tol``, ``round_dp`` and ``sym_layout`` behave as in
+    :func:`pagerank`, and ``init_ranks`` is the same trajectory-only
+    continuation state (missing ids fall back to 0.0 here — mass
+    concentrates on the walk's reach, not uniformly; the fixed point is
+    init-independent either way).
     """
     if not sources:
         raise ValueError("sources must be non-empty")
-    # same dst-partitioned persistent layout as pagerank(); same shared
-    # src-partitioned-layout column swap when the caller holds one
-    owns_layout = sym_layout is None
-    if not owns_layout:
-        # ValueError, not assert: stripped under python -O (ADVICE r8)
-        if directed:
-            raise ValueError("sym_layout requires directed=False")
-        e = sym_layout.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst")
-        ).filter(F.col("src") != F.col("dst"))
-    else:
-        e = (
-            edges.select("src", "dst")
-            if directed
-            else symmetrize(edges, dedup=False)
-        )
-        e = _edges_partitioned(e.filter(F.col("src") != F.col("dst")), "dst")
-    vertices = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
+    return _pagerank_loop(
+        edges, damping, max_iter, directed, tol, sym_layout, round_dp,
+        init_ranks, sources=sources,
     )
-    src_df = e.sparkSession.createDataFrame(
-        [(int(s),) for s in set(sources)], "id long"
-    ).withColumn("r", F.lit(1.0 / len(set(sources))))
-    out_deg = e.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("out_deg"))
-    base = checkpointed(
-        vertices.join(F.broadcast(src_df), "id", "left")
-        .fillna({"r": 0.0})
-        .join(out_deg, "id", "left")
-        .fillna({"out_deg": 0}),
-        lazy=True,
-    )
-    # ONE setup action (r9, the pagerank() fold): |V|, the round-0
-    # dangling mass, and the dangling count ride the aggregate that
-    # materializes the lazy-checkpointed base; the initial ranks are a
-    # pure projection of it. Driver-scalar dangling-mass convention per
-    # VERDICT r6 Next #5: the mass is read off the checkpointed state
-    # once per round and enters the next superstep as a literal — no
-    # per-round crossJoin(broadcast(agg)) subtree. Initial ranks equal
-    # the reset vector, so the round-0 mass is the reset weight on
-    # dangling sources.
-    is_dang = F.col("out_deg") == 0
-    row = base.agg(
-        F.count("*"),
-        F.coalesce(F.sum(F.when(is_dang, F.col("r"))), F.lit(0.0)),
-        F.sum(is_dang.cast("int")),
-    ).first()
-    n_vertices = row[0]  # for the size-aware superstep hint
-    dangling_mass = row[1] if directed else 0.0
-    has_danglings = directed and (row[2] or 0) > 0
-    if init_ranks is None:
-        ranks = base.withColumn("pr", F.col("r"))
-    else:
-        # continuation state (see _resolve_init_ranks); absent ids get
-        # 0.0 — restart mass concentrates on the walk's reach
-        iid, ipr = _resolve_init_ranks(init_ranks)
-        ranks = base.join(
-            _state_hinted(
-                init_ranks.select(
-                    F.col(iid).alias("id"), F.col(ipr).alias("_ipr")
-                ),
-                n_vertices,
-            ),
-            "id",
-            "left",
-        ).select(
-            "id",
-            "r",
-            "out_deg",
-            F.coalesce("_ipr", F.lit(0.0)).alias("pr"),
-        )
-        if has_danglings:
-            # no closed form for the provided init — one setup action
-            dangling_mass = (
-                ranks.agg(
-                    F.coalesce(
-                        F.sum(F.when(F.col("out_deg") == 0, F.col("pr"))),
-                        F.lit(0.0),
-                    )
-                ).first()[0]
-            )
-    k = 1 if has_danglings else _state_cadence(n_vertices)
-    prev_ck = ranks  # last checkpointed state, for the tol delta
-    converged = False  # True ⇔ the loop broke after a materializing read
-    for it in range(max_iter):
-        contribs = (
-            e.join(
-                _state_hinted(ranks.withColumnRenamed("id", "src"), n_vertices),
-                "src",
-            )
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("pr") / F.col("out_deg")).alias("c"),
-            )
-            .groupBy("id")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        updated = base.join(contribs, "id", "left")
-        new_pr = F.lit((1.0 - damping) + damping * dangling_mass) * F.col(
-            "r"
-        ) + F.lit(damping) * F.coalesce("inflow", F.lit(0.0))
-        if round_dp is not None:
-            new_pr = F.round(new_pr, round_dp)
-        ranks = updated.select("id", "r", "out_deg", new_pr.alias("pr"))
-        # Same L1-delta early exit as pagerank(): the personalized chain
-        # is the same d-contraction, so a sub-tol delta at a checkpointed
-        # round bounds all remaining movement (pass tol=None for the
-        # exact-maxIter contract).
-        if ((it + 1) % k == 0) or it == max_iter - 1:
-            # lazy: same fold as pagerank() — first read materializes
-            ranks = checkpointed(ranks, lazy=True)
-            if has_danglings and it < max_iter - 1:
-                dangling_mass = (
-                    ranks.agg(
-                        F.coalesce(
-                            F.sum(F.when(F.col("out_deg") == 0, F.col("pr"))),
-                            F.lit(0.0),
-                        )
-                    ).first()[0]
-                )
-            if tol is not None and it < max_iter - 1:
-                delta = (
-                    ranks.select("id", "pr")
-                    .join(
-                        _state_hinted(
-                            prev_ck.select("id", F.col("pr").alias("pp")),
-                            n_vertices,
-                        ),
-                        "id",
-                    )
-                    .agg(F.sum(F.abs(F.col("pr") - F.col("pp"))))
-                    .first()[0]
-                )
-                if delta is not None and delta < tol:
-                    converged = True
-                    break
-            prev_ck = ranks
-    if not converged:
-        # run-to-max_iter: the final lazy checkpoint got no follow-up
-        # read — materialize it regardless of layout ownership (ADVICE
-        # r8 + r9, same hoist as pagerank(): a caller-provided
-        # sym_layout keeps the cache live but the caller's first action
-        # would still silently re-run the last superstep)
-        ranks.agg(F.count(F.lit(1))).first()
-    if owns_layout:  # shared layouts outlive the call (caller-owned)
-        e.unpersist(blocking=False)  # ranks is materialized; cache is dead
-    return ranks.select("id", F.round(F.col("pr"), 6).alias("pagerank"))
 
 
 # ---------------------------------------------------------------------------
@@ -1900,93 +1812,15 @@ def pagerank_weighted(
     :func:`_edges_partitioned` deduplicates (src, dst) as part of the
     loop layout, silently collapsing the parallel edges back to weight
     1 (caught by the closed-form star oracle). The direct formulation
-    keeps the weighted edge list intact and reuses the loop hygiene —
-    dst-partitioned persisted layout WITHOUT the dedup, out-strength
-    joined once from the checkpointed base, one edge-state join + one
-    keyed sum per round, dangling mass as the per-round driver scalar
-    riding the same materializing action, per-round lazy checkpoints.
+    runs the shared loop (:func:`_pagerank_loop`) with the weight
+    column on a dst-partitioned persisted layout WITHOUT the dedup and
+    the out-strength as the divisor.
 
-    Fixed ``max_iter`` rounds (the oracle contract); production callers
-    wanting tol-based early exit compose it like :func:`pagerank`'s
-    delta fold. Output rounds at 6 dp like the unweighted loop."""
-    from pyspark import StorageLevel
-
-    e = edges.select(
-        "src", "dst", F.col(weight_col).cast("double").alias("w")
+    Fixed ``max_iter`` rounds (the oracle contract). Output rounds at
+    6 dp like the unweighted loop."""
+    return _pagerank_loop(
+        edges, damping, max_iter, directed, None, weight_col=weight_col
     )
-    if not directed:
-        e = e.unionByName(
-            e.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
-            )
-        )
-    e = e.filter(F.col("src") != F.col("dst"))
-    # data-sized layout partitioning (r15) — same derivation as
-    # _edges_partitioned, without its dedup (parallel edges are weights
-    # here); the count pass is once per call, amortized over max_iter
-    # rounds of exchange-free contribution aggregates.
-    e = (
-        e.repartition(_adaptive_edge_parts(e.count(), e.sparkSession), "dst")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    out_w = e.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("s"))
-    vertices = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    base = checkpointed(vertices.join(out_w, "id", "left"), lazy=True)
-    row = base.agg(
-        F.count("*"), F.sum(F.col("s").isNull().cast("int"))
-    ).first()
-    n = row[0]
-    if n == 0:
-        e.unpersist(blocking=False)
-        return edges.sparkSession.createDataFrame(
-            [], "id long, pagerank double"
-        )
-    n_dangling = row[1] or 0
-    ranks = base.withColumn("pr", F.lit(1.0 / n))
-    dangling_mass = n_dangling * (1.0 / n)
-    for _ in range(max_iter):
-        contribs = (
-            e.join(
-                _state_hinted(
-                    ranks.select(
-                        F.col("id").alias("src"), "pr", F.col("s").alias("os")
-                    ),
-                    n,
-                ),
-                "src",
-            )
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("pr") * F.col("w") / F.col("os")).alias("c"),
-            )
-            .groupBy("id")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        new_pr = F.lit((1.0 - damping) / n) + F.lit(damping) * (
-            F.coalesce("inflow", F.lit(0.0)) + F.lit(dangling_mass / n)
-        )
-        ranks = checkpointed(
-            base.join(contribs, "id", "left").select(
-                "id", "s", new_pr.alias("pr")
-            ),
-            lazy=True,
-        )
-        # ONE action per round: the dangling-mass read materializes the
-        # lazily-checkpointed state (the unweighted loop's r7 fold)
-        dangling_mass = (
-            ranks.agg(
-                F.coalesce(
-                    F.sum(F.when(F.col("s").isNull(), F.col("pr"))),
-                    F.lit(0.0),
-                )
-            ).first()[0]
-        )
-    e.unpersist(blocking=False)
-    return ranks.select("id", F.round(F.col("pr"), 6).alias("pagerank"))
 
 
 def edge_hash_weight(src: Column, dst: Column) -> Column:
@@ -3132,6 +2966,10 @@ def hits(
     """
     from pyspark import StorageLevel
 
+    if n_iter < 1:
+        # the final densify joins the last auth half-step, which exists
+        # only after one round
+        raise ValueError(f"n_iter must be >= 1; got {n_iter}")
     d = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).distinct()

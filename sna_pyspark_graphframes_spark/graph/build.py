@@ -19,8 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sna_pyspark_graphframes_spark.graph.core import Graph
-
 
 def symmetrize(edges: DataFrame, dedup: bool = True) -> DataFrame:
     """Emit both (src,dst) and (dst,src) — undirected adjacency semantics.
@@ -174,7 +172,3 @@ def user_session_edges(events: DataFrame, gap_seconds: int = 3600) -> DataFrame:
         )
         .select("src", "dst")
     )
-
-
-def copurchase_graph(lineitem: DataFrame) -> Graph:
-    return Graph.from_edges(copurchase_edges(lineitem))

@@ -47,15 +47,6 @@ def degrees(edges: DataFrame, sym: DataFrame | None = None) -> DataFrame:
     )
 
 
-def average_degree(
-    edges: DataFrame, sym: DataFrame | None = None
-) -> DataFrame:
-    """1-row ``(avg_degree)`` — paper Table 1's "average degree"."""
-    return degrees(edges, sym=sym).agg(
-        F.round(F.avg("degree"), 4).alias("avg_degree")
-    )
-
-
 def degree_histogram(edges: DataFrame, normalized: bool = False) -> DataFrame:
     """``(degree, cnt)`` histogram; optionally normalized to a pmf
     (``nx.degree_histogram`` + pk at ``/root/reference/main.py:108, 132-135``).
@@ -310,23 +301,6 @@ def top_k_by_degree(edges: DataFrame, k: int = 10) -> DataFrame:
     — per-partition heaps then a driver merge of k·P rows, no full sort.
     """
     return degrees(edges).orderBy(F.col("degree").desc(), F.col("id").asc()).limit(k)
-
-
-def out_degrees(edges: DataFrame) -> DataFrame:
-    """``(id, out_degree)`` of a DIRECTED edge set (= GraphFrames
-    ``g.outDegrees``). Vertices with no out-edges are absent, matching
-    GraphFrames."""
-    return edges.groupBy(F.col("src").alias("id")).agg(
-        F.count("*").alias("out_degree")
-    )
-
-
-def in_degrees(edges: DataFrame) -> DataFrame:
-    """``(id, in_degree)`` of a DIRECTED edge set (= GraphFrames
-    ``g.inDegrees``)."""
-    return edges.groupBy(F.col("dst").alias("id")).agg(
-        F.count("*").alias("in_degree")
-    )
 
 
 def in_out_degrees(edges: DataFrame) -> DataFrame:

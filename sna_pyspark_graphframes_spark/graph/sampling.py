@@ -231,22 +231,9 @@ def sample_graph(
     already-computed clustering frame (the triangle pass is the costliest
     input; engines that already materialized per-vertex triangles — see
     ``registry._tri`` — should pass it)."""
-    import os
-    import time
-
     from sna_pyspark_graphframes_spark.graph.build import canonical_edges
     from sna_pyspark_graphframes_spark.graph.metrics import local_clustering
-
-    from sna_pyspark_graphframes_spark.plans.iterate import checkpointed as _ckpt
-
-    profile = os.environ.get("SPARK_GRAFT_PROFILE") == "1"
-    _t0 = time.perf_counter()
-
-    def _tick(stage: str) -> None:
-        nonlocal _t0
-        if profile:
-            print(f"## sample_graph {stage}: {time.perf_counter() - _t0:.2f}s", flush=True)
-        _t0 = time.perf_counter()
+    from sna_pyspark_graphframes_spark.plans.iterate import checkpointed
 
     # checkpoint (not lazy cache): reused by LPA + adjacency + the induced
     # subgraph, and the LPA loop assumes a materialized symmetric frame.
@@ -255,8 +242,7 @@ def sample_graph(
     # layout — e.g. ``registry._copurchase_sym`` — qualifies and skips
     # this per-call checkpoint entirely; VERDICT r9 Next #6).
     if sym is None:
-        sym = _ckpt(symmetrize(edges, dedup=True))
-    _tick("symmetrize")
+        sym = checkpointed(symmetrize(edges, dedup=True))
     # ``labels`` lets callers reuse an already-computed LPA frame (engines
     # that just ran community detection on the same graph — see
     # ``registry._lpa_labels`` — shouldn't pay the 5-superstep loop twice);
@@ -267,7 +253,6 @@ def sample_graph(
         labels = split_oversized_communities(labels, max_community_size, seed)
     labels = dense_rekey(labels).cache()
     labels.count()
-    _tick("lpa+rekey")
     # Materialize the two walk inputs BEFORE the group-map shuffle. Folded
     # into one mega-plan, the adjacency collect_set and the triangle pass
     # run inside the same job as the applyInPandas shuffle, and AQE plans
@@ -275,14 +260,12 @@ def sample_graph(
     # 61 s vs 16 s at sf0.1 for the whole walk stage. Checkpointing gives
     # each input its own fully-parallel job and the walk join reads two
     # flat materialized frames.
-    adj = _ckpt(adjacency(sym, directed=True))  # sym already both directions
-    _tick("adjacency")
+    adj = checkpointed(adjacency(sym, directed=True))  # sym already both directions
     cc = (
         vertex_cc
         if vertex_cc is not None
-        else _ckpt(local_clustering(canonical_edges(sym)))  # triangle pass
+        else checkpointed(local_clustering(canonical_edges(sym)))  # triangle pass
     )
-    _tick("cc")
     labeled_adj = (
         labels.join(adj, "id")
         .join(cc, "id", "left")
@@ -292,9 +275,6 @@ def sample_graph(
     # eager materialization: the walk lineage (LPA + triangle pass + Arrow
     # kernel) must run exactly ONCE — a lazy .cache() would re-execute it
     # for each of the induced-subgraph semi-joins before the cache fills
-    from sna_pyspark_graphframes_spark.plans.iterate import checkpointed
-
     sampled_vertices = checkpointed(walks.select("id").distinct())
-    _tick("walk")
     sampled_edges = induced_subgraph(sym, sampled_vertices)
     return SampleResult(labels, sampled_vertices, sampled_edges)

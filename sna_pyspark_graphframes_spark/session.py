@@ -77,11 +77,8 @@ def get_spark(
         # ran 267.4 s vs 209.3 s with the default — fat 64MB-target
         # partitions serialize the compute-heavy post-shuffle stages
         # (similarity intersections, text aggregations) that the default
-        # keeps spread across cores. Knob retained for cluster tuning.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"),
-        )
+        # keeps spread across cores.
+        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
