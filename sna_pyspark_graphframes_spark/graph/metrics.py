@@ -15,10 +15,12 @@ All inputs are an *undirected* edge set; pass edges through
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sna_pyspark_graphframes_spark.graph.build import symmetrize
+from sna_pyspark_graphframes_spark.graph.build import induced_subgraph, symmetrize
 from sna_pyspark_graphframes_spark.plans.hints import state_hinted
 from sna_pyspark_graphframes_spark.plans.iterate import checkpointed
 
@@ -206,7 +208,13 @@ def triangles_per_vertex_adjacency(
     runs exchange-free on the cached blocks.
     """
     deg = checkpointed(degrees(edges, sym=sym)) if deg is None else deg
-    oriented = _degree_oriented(edges, deg, sym=sym)
+    return _intersect_triangles(_degree_oriented(edges, deg, sym=sym))
+
+
+def _intersect_triangles(oriented: DataFrame) -> DataFrame:
+    """``(id, triangles)`` from an acyclic orientation holding one row
+    per undirected edge: the adjacency-intersect plan of
+    :func:`triangles_per_vertex_adjacency`, each triangle once."""
     adj = oriented.groupBy("src").agg(F.collect_list("dst").alias("nbrs"))
     a_side = adj.select(F.col("src").alias("a"), F.col("nbrs").alias("na"))
     b_side = adj.select(F.col("src").alias("b"), F.col("nbrs").alias("nb"))
@@ -226,6 +234,51 @@ def triangles_per_vertex_adjacency(
     )
     per_corner = tri.select(F.explode(F.array("a", "b", "c")).alias("id"))
     return per_corner.groupBy("id").agg(F.count("*").alias("triangles"))
+
+
+@dataclass(frozen=True)
+class TriangleBasis:
+    """The degree, orientation and triangle tables of one undirected
+    graph, built once and read by every consumer: the walk's clustering
+    input, the metric reports, and induced subgraphs via :meth:`restrict`
+    (GraphX derives ``subgraph`` by masking the parent's indices the
+    same way, rather than rebuilding them)."""
+
+    deg: DataFrame       # (id, degree)
+    oriented: DataFrame  # (src, dst): each edge once, lower (degree, id) first
+    tri: DataFrame       # (id, triangles); triangle-free vertices absent
+
+    def restrict(self, vertices: DataFrame) -> TriangleBasis:
+        """The basis of the subgraph induced by ``vertices`` (column
+        ``id``), with no second orientation or degree pass over the
+        parent: a triangle lies in the induced subgraph iff its three
+        corners are in ``vertices``, and the parent's (degree, id) order
+        restricted to them is still a total order, so the restricted
+        orientation enumerates each of the subgraph's triangles exactly
+        once. A vertex of ``vertices`` with no neighbour inside it has
+        no edge and so no row — the vertex set of the induced edge list.
+        Only the orientation is materialized; ``deg`` and ``tri`` are
+        lazy over it."""
+        oriented = checkpointed(induced_subgraph(self.oriented, vertices))
+        deg = (
+            oriented.select(F.explode(F.array("src", "dst")).alias("id"))
+            .groupBy("id")
+            .agg(F.count("*").alias("degree"))
+        )
+        return TriangleBasis(deg, oriented, _intersect_triangles(oriented))
+
+
+def triangle_basis(sym: DataFrame, deg: DataFrame | None = None) -> TriangleBasis:
+    """Materialized degree, degree-ordered orientation and per-vertex
+    triangle tables of the graph whose DEDUPED symmetric closure is
+    ``sym`` (one row per arc, no self-loops — the ``degrees(sym=)``
+    contract), in one pass: the degree aggregate feeds the orientation
+    (a filter over ``sym``, see ``_degree_oriented``), the orientation
+    feeds the adjacency-intersect triangle plan. ``deg`` reuses a degree
+    table the caller already holds materialized."""
+    deg = checkpointed(degrees(sym, sym=sym)) if deg is None else deg
+    oriented = checkpointed(_degree_oriented(sym, deg, sym=sym))
+    return TriangleBasis(deg, oriented, checkpointed(_intersect_triangles(oriented)))
 
 
 def local_clustering(

@@ -229,10 +229,13 @@ def sample_graph(
     per sub-community) — set it on power-law graphs where LPA emits a giant
     label. ``vertex_cc`` ``(id, cc)`` lets callers reuse an
     already-computed clustering frame (the triangle pass is the costliest
-    input; engines that already materialized per-vertex triangles — see
-    ``registry._tri`` — should pass it)."""
-    from sna_pyspark_graphframes_spark.graph.build import canonical_edges
-    from sna_pyspark_graphframes_spark.graph.metrics import local_clustering
+    input; callers that already hold the graph's ``metrics.
+    triangle_basis`` — ``pipeline.run_pipeline``, ``registry._tri`` —
+    should pass it); without it the same helper builds one from ``sym``."""
+    from sna_pyspark_graphframes_spark.graph.metrics import (
+        local_clustering,
+        triangle_basis,
+    )
     from sna_pyspark_graphframes_spark.plans.iterate import checkpointed
 
     # checkpoint (not lazy cache): reused by LPA + adjacency + the induced
@@ -258,17 +261,16 @@ def sample_graph(
     # run inside the same job as the applyInPandas shuffle, and AQE plans
     # their exchanges against the walk's tiny group cardinality — measured
     # 61 s vs 16 s at sf0.1 for the whole walk stage. Checkpointing gives
-    # each input its own fully-parallel job and the walk join reads two
-    # flat materialized frames.
+    # each input its own fully-parallel job and the walk join reads flat
+    # materialized frames (the clustering frame is a |V| join of the
+    # basis's checkpointed degree and triangle tables).
     adj = checkpointed(adjacency(sym, directed=True))  # sym already both directions
-    cc = (
-        vertex_cc
-        if vertex_cc is not None
-        else checkpointed(local_clustering(canonical_edges(sym)))  # triangle pass
-    )
+    if vertex_cc is None:
+        basis = triangle_basis(sym)
+        vertex_cc = local_clustering(sym, deg=basis.deg, tri=basis.tri)
     labeled_adj = (
         labels.join(adj, "id")
-        .join(cc, "id", "left")
+        .join(vertex_cc, "id", "left")
         .fillna({"cc": 0.0})
     )
     walks = community_random_walk(labeled_adj, alpha=alpha, seed=seed)

@@ -18,6 +18,12 @@ Differences from the reference, all deliberate (SURVEY.md §2.5): named
 columns at scan, full undirected adjacency (its grouped-union bug fixed),
 seeded RNG, semi-join induced subgraph, and every metric computed
 distributively instead of on a collect()ed NetworkX graph.
+
+One triangle enumeration per run: the original graph's degrees,
+degree-ordered orientation and triangles are computed once and shared by
+the walk's clustering input and the original-side report; the sample-side
+report restricts that orientation to the sampled vertices instead of
+re-orienting the sample.
 """
 
 from __future__ import annotations
@@ -30,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sna_pyspark_graphframes_spark.graph import algorithms, build, metrics, sampling
+from sna_pyspark_graphframes_spark.plans.iterate import checkpointed
 
 
 @dataclass(frozen=True)
@@ -47,37 +54,29 @@ class GraphReport:
     diameter: int | None = None
 
 
-def measure(edges: DataFrame, exact_paths: bool = False) -> GraphReport:
-    """Compute the reference's metric set distributively.
-
-    ``exact_paths=True`` adds the all-pairs metrics (betweenness, closeness,
-    diameter) — O(V·E), fixture/small-graph scale only; at 100 TB pass
-    sampled landmarks through ``algorithms`` directly instead."""
-    canonical = build.canonical_edges(edges).cache()
-    deg = metrics.degrees(canonical).cache()
-    tri = metrics.triangles_per_vertex(canonical, deg=deg)
+def _report(
+    deg: DataFrame, tri: DataFrame, canonical: DataFrame | None = None
+) -> GraphReport:
+    """The metric bundle of one graph from its degree and per-vertex
+    triangle tables; ``canonical`` (its canonical edge list) adds the
+    all-pairs metrics. The empty graph reports zeros."""
     # TWO driver actions for the five cheap scalars (VERDICT r11 wrong
     # #3 — was five sequential 1-row collects): |V|, |E| and mean degree
-    # ride ONE aggregate over the cached degree frame (Σdeg/2 = |E|
-    # exactly on the canonical edge set), and the two 1-row
-    # clustering/transitivity frames attach via a broadcast crossJoin
-    # and collect together.
+    # ride ONE aggregate over the degree frame (Σdeg/2 = |E| exactly on
+    # the canonical edge set), and the two 1-row clustering/transitivity
+    # frames attach via a broadcast crossJoin and collect together.
     row = deg.agg(
         F.count("*").alias("n_v"),
-        (F.sum("degree") / 2).cast("long").alias("n_e"),
-        F.avg("degree").alias("avg_deg"),
+        F.coalesce((F.sum("degree") / 2).cast("long"), F.lit(0)).alias("n_e"),
+        F.coalesce(F.avg("degree"), F.lit(0.0)).alias("avg_deg"),
     ).first()
-    n_v, n_e, avg_deg = row["n_v"], row["n_e"], row["avg_deg"]
     cc_tr = (
-        metrics.average_clustering(canonical, deg=deg, tri=tri)
-        .crossJoin(
-            F.broadcast(metrics.transitivity(canonical, deg=deg, tri=tri))
-        )
+        metrics.average_clustering(None, deg=deg, tri=tri)
+        .crossJoin(F.broadcast(metrics.transitivity(None, deg=deg, tri=tri)))
         .first()
     )
-    avg_cc, trans = cc_tr[0], cc_tr[1]
     bet = clo = dia = None
-    if exact_paths:
+    if canonical is not None:
         bet = round(
             algorithms.betweenness_centrality(canonical)
             .agg(F.avg("betweenness"))
@@ -87,15 +86,67 @@ def measure(edges: DataFrame, exact_paths: bool = False) -> GraphReport:
         clo = algorithms.average_closeness(canonical).collect()[0][0]
         dia = algorithms.diameter(canonical).collect()[0][0]
     return GraphReport(
-        n_vertices=n_v,
-        n_edges=n_e,
-        avg_degree=round(avg_deg, 4),
-        avg_clustering=avg_cc,
-        transitivity=trans,
+        n_vertices=row["n_v"],
+        n_edges=row["n_e"],
+        avg_degree=round(row["avg_deg"], 4),
+        avg_clustering=0.0 if cc_tr[0] is None else cc_tr[0],
+        transitivity=cc_tr[1],
         avg_betweenness=bet,
         avg_closeness=clo,
         diameter=dia,
     )
+
+
+def measure(edges: DataFrame, exact_paths: bool = False) -> GraphReport:
+    """Compute the reference's metric set distributively.
+
+    ``exact_paths=True`` adds the all-pairs metrics (betweenness, closeness,
+    diameter) — O(V·E), fixture/small-graph scale only; at 100 TB pass
+    sampled landmarks through ``algorithms`` directly instead."""
+    canonical = build.canonical_edges(edges).cache()
+    deg = metrics.degrees(canonical).cache()
+    tri = metrics.triangles_per_vertex(canonical, deg=deg)
+    return _report(deg, tri, canonical if exact_paths else None)
+
+
+def _run(
+    edges: DataFrame, alpha: float, max_iter: int, seed: int, exact_paths: bool
+) -> tuple[dict, sampling.SampleResult]:
+    """``run_pipeline``'s report together with the ``SampleResult`` it
+    was measured on.
+
+    The original graph's symmetric layout, degrees, orientation and
+    triangles are built ONCE (``metrics.triangle_basis``) and read by the
+    walk's clustering input and by both reports; the sample's tables are
+    the basis restricted to the sampled vertices — no second
+    canonicalize/degree/orient pass, one triangle enumeration per run."""
+    sym = checkpointed(build.symmetrize(edges, dedup=True))
+    basis = metrics.triangle_basis(sym)
+    result = sampling.sample_graph(
+        edges,
+        alpha=alpha,
+        max_iter=max_iter,
+        seed=seed,
+        vertex_cc=metrics.local_clustering(sym, deg=basis.deg, tri=basis.tri),
+        sym=sym,
+    )
+    sample = basis.restrict(result.sampled_vertices)
+    report = {
+        "params": {"alpha": alpha, "max_iter": max_iter, "seed": seed},
+        "n_communities": result.labels.agg(F.countDistinct("label")).collect()[0][0],
+        "n_sampled_vertices": result.sampled_vertices.count(),
+        "original": _report(
+            basis.deg,
+            basis.tri,
+            build.canonical_edges(edges) if exact_paths else None,
+        ).__dict__,
+        "sample": _report(
+            sample.deg,
+            sample.tri,
+            build.canonical_edges(result.sampled_edges) if exact_paths else None,
+        ).__dict__,
+    }
+    return report, result
 
 
 def run_pipeline(
@@ -107,17 +158,7 @@ def run_pipeline(
 ) -> dict:
     """Sample the graph and report original-vs-sample metrics (the
     reference's full program, ``/root/reference/main.py:113-230``)."""
-    result = sampling.sample_graph(edges, alpha=alpha, max_iter=max_iter, seed=seed)
-    n_comm = result.labels.agg(F.countDistinct("label")).collect()[0][0]
-    original = measure(edges, exact_paths)
-    sample = measure(result.sampled_edges, exact_paths)
-    return {
-        "params": {"alpha": alpha, "max_iter": max_iter, "seed": seed},
-        "n_communities": n_comm,
-        "n_sampled_vertices": result.sampled_vertices.count(),
-        "original": original.__dict__,
-        "sample": sample.__dict__,
-    }
+    return _run(edges, alpha, max_iter, seed, exact_paths)[0]
 
 
 def main() -> None:
@@ -135,18 +176,9 @@ def main() -> None:
 
     spark = get_spark(app_name="sampling_pipeline")
     edges = read_edge_list(spark, args.edge_file)
-    report = run_pipeline(
-        edges,
-        alpha=args.alpha,
-        max_iter=args.max_iter,
-        seed=args.seed,
-        exact_paths=args.exact,
-    )
+    report, result = _run(edges, args.alpha, args.max_iter, args.seed, args.exact)
     if args.output:
-        res = sampling.sample_graph(
-            edges, alpha=args.alpha, max_iter=args.max_iter, seed=args.seed
-        )
-        res.sampled_edges.write.mode("overwrite").parquet(args.output)
+        result.sampled_edges.write.mode("overwrite").parquet(args.output)
         report["output"] = args.output
     print(json.dumps(report, indent=2))
 

@@ -150,11 +150,29 @@ def _memo(spark, sf_dir, tag: str, make) -> DataFrame:
         # plan-keyed, so the second registration is a warning/no-op at
         # best and deepens the fragile plan-key coupling the shared-layout
         # tests document (ADVICE r8)
-        if df.storageLevel.useMemory or df.storageLevel.useDisk:
-            _MEMO_CACHE[key] = df
-        else:
-            _MEMO_CACHE[key] = df.cache()
+        _MEMO_CACHE[key] = df if _stored(df) else df.cache()
     return _MEMO_CACHE[key]
+
+
+def _stored(df: DataFrame) -> bool:
+    """True when ``df``'s rows already sit in executor storage: cached
+    through the CacheManager, or a checkpoint. ``localCheckpoint`` does
+    not register with the CacheManager, so ``storageLevel`` reads NONE on
+    a checkpoint; its plan is a ``LogicalRDD`` leaf over the persisted
+    (or checkpointed) RDD instead, and a ``.cache()`` over it would store
+    the same rows twice (ADVICE r15)."""
+    level = df.storageLevel
+    if level.useMemory or level.useDisk:
+        return True
+    try:
+        plan = df._jdf.queryExecution().logical()
+        if plan.nodeName() != "LogicalRDD":
+            return False
+        rdd = plan.rdd()
+        rdd_level = rdd.getStorageLevel()
+        return rdd.isCheckpointed() or rdd_level.useMemory() or rdd_level.useDisk()
+    except Exception:  # no JVM handle (Spark Connect): keep the cache wrap
+        return False
 
 
 def _copurchase(spark, sf_dir):
@@ -869,31 +887,28 @@ def _deg(spark, sf_dir):
     )
 
 
-def _tri(spark, sf_dir):
-    # adjacency-intersect plan: same triangle set as the wedge join,
-    # measured 9.1 -> 4.8 s median at sf0.1 (REPORT.md r5) because the
-    # wedge exchange is never materialized. sym= (r9, VERDICT r8 Next #3):
-    # the triangle family was the last heavy consumer re-deriving its own
-    # orientation from the raw edge memo — it now reads the shared
-    # persisted layout, and the adjacency groupBy("src") rides the
-    # layout's partitioning exchange-free.
-    # checkpointed like _deg (r15): the triangle table is |V| rows behind
-    # a 2-join + explode plan over the layout — an eager localCheckpoint
-    # makes every downstream consumer (avg_clustering, transitivity,
-    # vertex_cc, fidelity) a 1-line LogicalRDD read instead of a
-    # re-analysis of the nested tree.
-    from sna_pyspark_graphframes_spark.plans.iterate import checkpointed
+def _tri_basis(spark, sf_dir) -> metrics.TriangleBasis:
+    """Degree, degree-ordered orientation and per-vertex triangle tables
+    of the co-purchase graph (``metrics.triangle_basis``), built once per
+    (session, sf_dir) over the shared layout and the ``_deg`` memo; the
+    walk sample's tables are its restriction (``sample_fidelity_report``).
+    Adjacency-intersect plan: same triangle set as the wedge join,
+    measured 9.1 -> 4.8 s median at sf0.1 (REPORT.md r5) because the
+    wedge exchange is never materialized; orientation is a filter over
+    the layout (r9, VERDICT r8 Next #3). All three tables are
+    checkpointed, so every consumer (avg_clustering, transitivity,
+    vertex_cc, fidelity) reads a 1-line LogicalRDD instead of re-analysing
+    the nested tree (r15). Cleared by ``clear_session_caches``."""
+    key = f"{id(spark)}:{sf_dir}:tri_basis"
+    if key not in _OBJ_MEMO:
+        _OBJ_MEMO[key] = metrics.triangle_basis(
+            _copurchase_sym(spark, sf_dir), deg=_deg(spark, sf_dir)
+        )
+    return _OBJ_MEMO[key]
 
-    return _memo(
-        spark,
-        sf_dir,
-        "triangles",
-        lambda: checkpointed(metrics.triangles_per_vertex_adjacency(
-            _copurchase(spark, sf_dir),
-            deg=_deg(spark, sf_dir),
-            sym=_copurchase_sym(spark, sf_dir),
-        )),
-    )
+
+def _tri(spark, sf_dir):
+    return _tri_basis(spark, sf_dir).tri
 
 
 @register("degree", DEGREE_SQL)
@@ -3649,14 +3664,13 @@ def q_sample_fidelity_report(spark, sf_dir):
     by tests/test_sampling_invariants.py; 100 TB path per SCALE.md:
     the same certificate with sampled-landmark metrics replacing the
     exact all-pairs ones."""
-    from sna_pyspark_graphframes_spark.plans.iterate import checkpointed
-
     e = _copurchase(spark, sf_dir)
     labels = _lpa_labels(spark, sf_dir)
     # r14 optimization: consume the SHARED seeded sample (_walk42) —
     # identical deterministic result, walk paid once per session.
     res = _walk42(spark, sf_dir)
-    deg_o, tri_o = _deg(spark, sf_dir), _tri(spark, sf_dir)
+    basis = _tri_basis(spark, sf_dir)
+    deg_o, tri_o = basis.deg, basis.tri
     orig = deg_o.agg(
         F.count("*").cast("long").alias("orig_n_vertices"),
         (F.sum("degree") / 2).cast("long").alias("orig_n_edges"),
@@ -3665,17 +3679,16 @@ def q_sample_fidelity_report(spark, sf_dir):
     cc_o = metrics.average_clustering(e, deg=deg_o, tri=tri_o).select(
         F.col("avg_cc").alias("orig_avg_clustering")
     )
-    # sample metrics: canonicalize the symmetric induced edge set once,
-    # checkpoint (degree + triangle passes both consume it)
-    can_s = checkpointed(res.sampled_edges.filter(F.col("src") < F.col("dst")))
-    deg_s = checkpointed(metrics.degrees(can_s))
-    samp = deg_s.agg(
+    # sample metrics: the original's orientation restricted to the
+    # sampled vertices — no second canonicalize/degree/orient pass
+    samp_basis = basis.restrict(res.sampled_vertices)
+    samp = samp_basis.deg.agg(
         F.count("*").cast("long").alias("s_nv"),
         F.round(F.avg("degree"), 4).alias("s_ad"),
     )
-    cc_s = metrics.average_clustering(can_s, deg=deg_s).select(
-        F.col("avg_cc").alias("s_cc")
-    )
+    cc_s = metrics.average_clustering(
+        None, deg=samp_basis.deg, tri=samp_basis.tri
+    ).select(F.col("avg_cc").alias("s_cc"))
     covered = labels.join(res.sampled_vertices, "id", "left_semi").select(
         "label"
     ).distinct()

@@ -224,6 +224,18 @@ def test_triangle_plan_is_adjacency_intersect(spark, sf_dir):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
+def test_checkpointed_memos_are_stored_once(spark, sf_dir):
+    """``localCheckpoint`` does not register with the CacheManager, so a
+    ``.cache()`` over a checkpointed memo (the degree and triangle tables)
+    would keep its rows in storage twice: no InMemoryRelation may wrap
+    them. A lazy memo (the clustering join) is still cached."""
+    for df in (R._deg(spark, sf_dir), R._tri(spark, sf_dir)):
+        plan = df._jdf.queryExecution().withCachedData().toString()
+        assert "InMemoryRelation" not in plan
+        assert "LogicalRDD" in plan
+    assert R._vertex_cc(spark, sf_dir).storageLevel.useMemory
+
+
 def test_growing_frame_hints_are_size_gated(spark, sf_dir, monkeypatch):
     """The unbounded-frame rule (SCALE.md): a broadcast HINT is mandatory
     to the planner, so no frame whose row count grows with the data —
