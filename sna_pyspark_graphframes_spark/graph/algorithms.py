@@ -10,6 +10,14 @@ truncate lineage — so the only ceiling is cluster memory, not driver memory
 
 Inputs: ``edges`` is an undirected edge set in canonical form (src < dst,
 deduped, no self-loops) unless stated otherwise.
+
+``sym_layout`` (CC, LPA, PageRank/PPR, eigenvector, MIS, katz, label
+spreading, HyperANF): the deduped symmetric closure of ``edges``,
+materialized, owned by the caller — normally
+``_edges_partitioned(symmetrize(edges, dedup=False), "src")``, held once
+per graph and shared by every query on it (VERDICT r7 Next #7). The
+callee neither rebuilds nor unpersists it; without it each loop builds
+and releases its own layout (``plans.iterate.layout_scope``).
 """
 
 from __future__ import annotations
@@ -18,7 +26,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from sna_pyspark_graphframes_spark.graph.build import symmetrize
-from sna_pyspark_graphframes_spark.plans.iterate import checkpointed
+from sna_pyspark_graphframes_spark.plans.iterate import (
+    checkpointed,
+    frontier_supersteps,
+    layout_scope,
+)
 
 
 def _sym(edges: DataFrame) -> DataFrame:
@@ -136,7 +148,8 @@ def _edges_partitioned(
     ``key`` = the aggregate's key (LPA/CC group by src; PageRank groups
     contributions by dst). Measured on LPA at sf0.1: 6.37 s → 4.70 s
     median vs the localCheckpoint layout (REPORT.md r7). Callers must
-    ``.unpersist()`` once the loop's final state is materialized.
+    ``.unpersist()`` once the loop's final state is materialized
+    (``layout_scope`` does).
 
     ``num_partitions``: callers that already know the graph's size pass
     an explicit count; by default (r15) the count is DERIVED from the
@@ -148,7 +161,7 @@ def _edges_partitioned(
     explicitly and skip that pass.
 
     ``dedup=False`` keeps parallel edges (``pagerank_weighted``: they
-    carry distinct weights)."""
+    carry distinct weights; HITS: already distinct)."""
     from pyspark import StorageLevel
 
     if num_partitions is None:
@@ -157,6 +170,15 @@ def _edges_partitioned(
     if dedup:
         e = e.dropDuplicates(["src", "dst"])
     return e.persist(StorageLevel.MEMORY_AND_DISK)
+
+
+def _src_layout(edges: DataFrame, sym_layout: DataFrame | None):
+    """Scope of the src-partitioned symmetric loop layout: the caller's
+    ``sym_layout`` when given, else an own one released on exit."""
+    return layout_scope(
+        lambda: _edges_partitioned(symmetrize(edges, dedup=False), "src"),
+        sym_layout,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -181,13 +203,7 @@ def connected_components(
     simple propagation is kept here because social graphs have small
     diameter and the code stays one join + one aggregate per round.
 
-    ``sym_layout`` (r8, VERDICT r7 Next #7): a caller-held SHARED edge
-    layout — ``_edges_partitioned(symmetrize(edges, dedup=False),
-    "src")`` — reused across the whole graph-query family (CC / LPA /
-    PageRank / degrees all consume the same persisted frame; a
-    deployment holds one graph layout, not one per query). When passed,
-    this function neither rebuilds nor unpersists it — the caller owns
-    its lifetime."""
+    ``sym_layout``: the shared layout (module docstring)."""
     # src-partitioned persistent layout: the per-round min aggregate
     # groups by src, so its exchange is elided every round (see
     # _edges_partitioned). A/B'd at sf0.1 (REPORT.md r7): a WASH locally
@@ -196,74 +212,52 @@ def connected_components(
     # the r5 frontier form: one fewer per-round exchange of edge-derived
     # rows is what matters at 1000-executor scale, and it costs nothing
     # here.
-    owns_layout = sym_layout is None
-    sym = (
-        _edges_partitioned(symmetrize(edges, dedup=False), "src")
-        if owns_layout
-        else sym_layout
-    )
-    labels = (
-        sym.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
-    )
-    labels = checkpointed(labels, lazy=True)
-    n_vertices = labels.count()  # the materializing action (r9 setup fold)
-    # Frontier propagation (round 5): min-label merge is DELTA-propagating
-    # — a vertex's label only needs re-proposing after it CHANGES (its old,
-    # higher values were already absorbed by every neighbor, and min is
-    # idempotent), so each round joins the edges against only last round's
-    # changed vertices instead of the full |V| label table. Round 1 seeds
-    # the frontier with everyone (every initial label gets proposed once,
-    # establishing the invariant); afterwards per-round work tracks
-    # frontier-adjacent edges, which shrinks geometrically on small-world
-    # graphs. The fixed point — and the convergence test — are identical
-    # to the dense superstep. (Contrast LPA, whose mode() needs the FULL
-    # neighbor histogram: there the frontier only selects which vertices
-    # re-aggregate, here it also shrinks the join's build side.)
-    frontier = labels
-    n_frontier = n_vertices
-    LAST_STATS["cc_rounds"] = 0
-    for _ in range(max_iter):
-        LAST_STATS["cc_rounds"] += 1
-        nbr_min = (
-            sym.join(
-                _state_hinted(
-                    frontier.select(
-                        F.col("id").alias("dst"), F.col("component")
+    with _src_layout(edges, sym_layout) as sym:
+        labels = (
+            sym.select(F.col("src").alias("id"))
+            .distinct()
+            .withColumn("component", F.col("id"))
+        )
+        labels = checkpointed(labels, lazy=True)
+        n_vertices = labels.count()  # the materializing action (r9 setup fold)
+
+        # Frontier propagation (round 5): min-label merge is
+        # DELTA-propagating — a vertex's label only needs re-proposing
+        # after it CHANGES (its old, higher values were already absorbed by
+        # every neighbor, and min is idempotent), so each round joins the
+        # edges against only last round's changed vertices instead of the
+        # full |V| label table; per-round work tracks frontier-adjacent
+        # edges, which shrinks geometrically on small-world graphs. (Contrast
+        # LPA, whose mode() needs the FULL neighbor histogram: there the
+        # frontier only selects which vertices re-aggregate, here it also
+        # shrinks the join's build side.) Labels are monotone
+        # non-increasing, so "changed" is exactly new < old.
+        def step(labels, frontier, n_frontier):
+            nbr_min = (
+                sym.join(
+                    _state_hinted(
+                        frontier.select(
+                            F.col("id").alias("dst"), F.col("component")
+                        ),
+                        n_frontier,
                     ),
-                    n_frontier,
-                ),
-                "dst",
+                    "dst",
+                )
+                .groupBy(F.col("src").alias("id"))
+                .agg(F.min("component").alias("nbr_comp"))
             )
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.min("component").alias("nbr_comp"))
-        )
-        new_comp = F.least(
-            F.col("component"), F.coalesce("nbr_comp", F.col("component"))
-        )
-        # Convergence folded into the superstep (VERDICT r3 #3): labels are
-        # monotone non-increasing, so "changed" is exactly new < old — carry
-        # it as a 0/1 column through the SAME join and sum it off the
-        # checkpointed result; the same column IS the next frontier.
-        # lazy: the convergence read below is the materializing action
-        # (the HITS norm fold) — one job per superstep, not two
-        new_labels = checkpointed(
-            labels.join(nbr_min, "id", "left").select(
+            new_comp = F.least(
+                F.col("component"), F.coalesce("nbr_comp", F.col("component"))
+            )
+            return labels.join(nbr_min, "id", "left").select(
                 "id",
                 new_comp.alias("component"),
                 (new_comp < F.col("component")).cast("int").alias("chg"),
-            ),
-            lazy=True,
+            )
+
+        labels, LAST_STATS["cc_rounds"] = frontier_supersteps(
+            labels, n_vertices, max_iter, step
         )
-        changed = new_labels.agg(F.sum("chg")).first()[0]
-        frontier = new_labels.filter(F.col("chg") == 1).select("id", "component")
-        n_frontier = int(changed or 0)
-        labels = new_labels.drop("chg")
-        if not changed:
-            break
-    if owns_layout:  # shared layouts outlive the call (caller-owned)
-        sym.unpersist(blocking=False)  # labels is checkpointed; cache is dead
     return labels.select("id", "component")
 
 
@@ -355,8 +349,6 @@ def connected_components_twophase(edges: DataFrame, max_iter: int = 50) -> DataF
 def label_propagation(
     edges: DataFrame,
     max_iter: int = 5,
-    assume_symmetric: bool = False,
-    edge_layout: str = "partitioned",
     sym_layout: DataFrame | None = None,
 ) -> DataFrame:
     """Synchronous LPA: ``(id, label)`` after ``max_iter`` supersteps.
@@ -370,118 +362,92 @@ def label_propagation(
         §3.2 rebuild note);
       * isolated vertices keep their label.
 
-    ``assume_symmetric``: the input already contains both directions of
-    every edge (deduped) — skips the symmetrize+distinct pass (an |E|
-    explode + shuffle) that callers like the sampler have already paid.
-
     Per superstep: one join (labels onto edge dst) + ONE aggregate —
     ``mode(label, deterministic=True)`` is most-frequent-with-min-tie-break
     in a single typed aggregate (map-side partials buffer per-group
     histograms), replacing a two-stage count + ``max_by(struct)`` argmax
     (one fewer |E|-sized shuffle per superstep).
 
+    ``sym_layout``: the shared layout (module docstring); the sampler
+    passes its materialized symmetric closure here.
     """
-    persisted_sym = None
-    if sym_layout is not None:
-        # shared caller-owned layout (same contract as
-        # connected_components.sym_layout): already symmetrized,
-        # src-partitioned, persisted — reuse, never unpersist
-        sym = sym_layout
-    elif assume_symmetric:
-        sym = edges
-    elif edge_layout == "partitioned":
-        # Default layout (VERDICT r6 Next #4, adopted r7): src-partitioned
-        # persistent edges (see _edges_partitioned) — the mode aggregate's
-        # ClusteredDistribution(id←src) is satisfied through the broadcast
-        # label join, so NO per-round exchange of edge-derived rows
-        # (plan-verified: partial_mode feeds mode with no Exchange
-        # between). Measured at sf0.1, solo, median of 5 alternating reps:
-        # 6.37 s (checkpoint layout) → 4.70 s, non-overlapping rep ranges
-        # (REPORT.md r7). On a cluster the same layout keeps each round's
-        # join shuffling only the |V| state frame.
-        persisted_sym = _edges_partitioned(
-            symmetrize(edges, dedup=False), "src"
+    # Own layout (VERDICT r6 Next #4, adopted r7): src-partitioned
+    # persistent edges (see _edges_partitioned) — the mode aggregate's
+    # ClusteredDistribution(id←src) is satisfied through the broadcast
+    # label join, so NO per-round exchange of edge-derived rows
+    # (plan-verified: partial_mode feeds mode with no Exchange between).
+    # Measured at sf0.1, solo, median of 5 alternating reps: 6.37 s
+    # (checkpoint layout) → 4.70 s, non-overlapping rep ranges (REPORT.md
+    # r7). On a cluster the same layout keeps each round's join shuffling
+    # only the |V| state frame.
+    with _src_layout(edges, sym_layout) as sym:
+        labels = (
+            sym.select(F.col("src").alias("id"))
+            .distinct()
+            .withColumn("label", F.col("id"))
         )
-        sym = persisted_sym
-    else:
-        sym = checkpointed(_sym(edges))
-    labels = (
-        sym.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-    )
-    labels = checkpointed(labels, lazy=True)
-    n_vertices = labels.count()  # the materializing action (r9 setup fold)
-    LAST_STATS["lpa_rounds"] = 0
-    LAST_STATS["lpa_frontier_sizes"] = []
-    # Frontier-only messaging (VERDICT r4 Next #4): in synchronous LPA a
-    # vertex's round-k+1 decision re-reads its FULL neighbor histogram,
-    # but if NO neighbor changed label in round k the histogram — and
-    # therefore the mode — is identical to round k's, so the vertex
-    # provably keeps its label. Hence only neighbors-of-changed vertices
-    # ("candidates") need the join+mode work; everyone else is carried
-    # over label-unchanged. Exactness: candidates re-aggregate over ALL
-    # their incident edges against ALL current labels (not just frontier
-    # edges), so the computed mode equals the dense superstep's. The
-    # frontier itself falls out of the same chg column that drives the
-    # convergence exit — one cheap scan of the checkpointed |V| frame per
-    # round, no extra jobs. Dense rounds skip the two candidate
-    # semi-joins: in a small-world graph the neighbor set of even a
-    # modest frontier covers most of the graph, so the prune only pays
-    # once the frontier is genuinely sparse — measured at sf0.1
-    # (REPORT.md r5): frontier sizes [20000, 15005, 14588, 13730, 751]
-    # across 5 rounds, and a frontier/2 gate was a wash (6.9 s vs 6.4 s
-    # dense, within host noise) because rounds 2-4 pruned almost nothing
-    # while paying the semi-joins. Gate at |frontier|·8 < |V| so only
-    # late, localized rounds (like that 751) take the frontier path.
-    frontier = None
-    n_frontier = n_vertices
-    for it in range(max_iter):
-        LAST_STATS["lpa_rounds"] += 1
-        if frontier is None or n_frontier * 8 > n_vertices:
-            cand_edges = sym
-        else:
-            cands = (
-                sym.join(
-                    _state_hinted(
-                        frontier.withColumnRenamed("id", "dst"), n_frontier
-                    ),
-                    "dst",
+        labels = checkpointed(labels, lazy=True)
+        n_vertices = labels.count()  # the materializing action (r9 setup fold)
+
+        # Frontier-only messaging (VERDICT r4 Next #4): in synchronous LPA
+        # a vertex's round-k+1 decision re-reads its FULL neighbor
+        # histogram, but if NO neighbor changed label in round k the
+        # histogram — and therefore the mode — is identical to round k's,
+        # so the vertex provably keeps its label. Hence only
+        # neighbors-of-changed vertices ("candidates") need the join+mode
+        # work; everyone else is carried over label-unchanged. Exactness:
+        # candidates re-aggregate over ALL their incident edges against ALL
+        # current labels (not just frontier edges), so the computed mode
+        # equals the dense superstep's. Dense rounds skip the two candidate
+        # semi-joins: in a small-world graph the neighbor set of even a
+        # modest frontier covers most of the graph, so the prune only pays
+        # once the frontier is genuinely sparse — measured at sf0.1
+        # (REPORT.md r5): frontier sizes [20000, 15005, 14588, 13730, 751]
+        # across 5 rounds, and a frontier/2 gate was a wash (6.9 s vs 6.4 s
+        # dense, within host noise) because rounds 2-4 pruned almost
+        # nothing while paying the semi-joins. Gate at |frontier|·8 < |V|
+        # so only late, localized rounds (like that 751) take the frontier
+        # path. Round 1's frontier is every vertex, so it runs dense.
+        def step(labels, frontier, n_frontier):
+            if n_frontier * 8 > n_vertices:
+                cand_edges = sym
+            else:
+                cands = (
+                    sym.join(
+                        _state_hinted(
+                            frontier.select(F.col("id").alias("dst")),
+                            n_frontier,
+                        ),
+                        "dst",
+                    )
+                    .select("src")
+                    .distinct()
                 )
-                .select("src")
-                .distinct()
+                cand_edges = sym.join(
+                    _state_hinted(cands, n_frontier * 64), "src"
+                )
+            nbr_labels = cand_edges.join(
+                _state_hinted(
+                    labels.withColumnRenamed("id", "dst"), n_vertices
+                ),
+                "dst",
+            ).select(F.col("src").alias("id"), "label")
+            best = nbr_labels.groupBy("id").agg(
+                F.mode("label", True).alias("new_label")
             )
-            cand_edges = sym.join(_state_hinted(cands, n_frontier * 64), "src")
-        nbr_labels = cand_edges.join(
-            _state_hinted(labels.withColumnRenamed("id", "dst"), n_vertices),
-            "dst",
-        ).select(F.col("src").alias("id"), "label")
-        best = nbr_labels.groupBy("id").agg(
-            F.mode("label", True).alias("new_label")
-        )
-        new_labels = checkpointed(
-            labels.join(best, "id", "left").select(
+            new_label = F.coalesce("new_label", "label")
+            return labels.join(best, "id", "left").select(
                 "id",
-                F.coalesce("new_label", "label").alias("label"),
-                (F.coalesce("new_label", "label") != F.col("label"))
-                .cast("int")
-                .alias("chg"),
-            ),
-            lazy=True,  # the frontier-size read materializes it (one job)
+                new_label.alias("label"),
+                (new_label != F.col("label")).cast("int").alias("chg"),
+            )
+
+        # Early exit at the fixed point: the remaining supersteps are
+        # identities, so it is semantics-preserving for any maxIter (the
+        # GraphFrames contract this mirrors runs exactly maxIter rounds).
+        labels, LAST_STATS["lpa_rounds"] = frontier_supersteps(
+            labels, n_vertices, max_iter, step
         )
-        n_frontier = new_labels.agg(F.sum("chg")).first()[0] or 0
-        LAST_STATS["lpa_frontier_sizes"].append(int(n_frontier))
-        frontier = new_labels.filter(F.col("chg") == 1).select("id")
-        labels = new_labels.drop("chg")
-        # Fixed point: the remaining supersteps are identities, so exiting
-        # early is semantics-preserving for any maxIter (the GraphFrames
-        # contract this mirrors runs exactly maxIter rounds; at a fixed
-        # point those rounds are no-ops).
-        if n_frontier == 0:
-            break
-    if persisted_sym is not None:
-        # labels is checkpointed (materialized) — the edge cache is dead
-        persisted_sym.unpersist(blocking=False)
     return labels
 
 
@@ -623,35 +589,28 @@ def strongly_connected_components(
         if vertices.isEmpty():
             break
         # --- 1. forward min-propagation to fixed point -------------------
-        colors = vertices.withColumn("color", F.col("id"))
-        colors = checkpointed(colors)
-        for _ in range(max_hops):
+        # min is idempotent, so only last hop's changed colors propagate
+        # (the connected_components frontier argument, along arcs)
+        def forward(colors, frontier, _n):
             prop = (
                 remaining.join(
-                    colors.select(F.col("id").alias("src"), "color"), "src"
+                    frontier.select(F.col("id").alias("src"), "color"), "src"
                 )
                 .groupBy(F.col("dst").alias("id"))
                 .agg(F.min("color").alias("in_color"))
             )
-            new_colors = (
-                colors.join(prop, "id", "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("color"), F.coalesce("in_color", F.col("color"))
-                    ).alias("color"),
-                )
+            new_color = F.least(
+                F.col("color"), F.coalesce("in_color", F.col("color"))
             )
-            new_colors = checkpointed(new_colors)
-            changed = (
-                new_colors.alias("n")
-                .join(colors.alias("o"), "id")
-                .filter(F.col("n.color") != F.col("o.color"))
-                .count()
+            return colors.join(prop, "id", "left").select(
+                "id",
+                new_color.alias("color"),
+                (new_color < F.col("color")).cast("int").alias("chg"),
             )
-            colors = new_colors
-            if changed == 0:
-                break
+
+        colors = checkpointed(vertices.withColumn("color", F.col("id")))
+        # the forward join takes no size hint, so no frontier size is read
+        colors, _ = frontier_supersteps(colors, 0, max_hops, forward)
         # --- 2. backward reach of each pivot within its color class ------
         # edges inside one color class, reversed
         ce = (
@@ -726,21 +685,15 @@ def weighted_sssp(
     spark = edges.sparkSession
     dist = spark.createDataFrame([(int(source), 0.0)], "id long, dist double")
     dist = checkpointed(dist)
-    frontier = dist
-    n_frontier = 1
-    for _ in range(max_iter):
-        # Frontier Bellman-Ford (round 5): the (min, +) relaxation is
-        # delta-propagating — an edge out of an UNCHANGED vertex proposes
-        # the same value it already proposed, and min is idempotent, so
-        # only edges out of last round's improved vertices are relaxed.
-        # Round 1's frontier is the source row itself; afterwards the
-        # relaxation cost tracks frontier-out-edges, not |settled|.
-        # Convergence folded into the superstep (same chg-column pattern
-        # as connected_components, ADVICE r4): distances are monotone
-        # non-increasing, so "improved" = new < old OR vertex newly
-        # reached — carried as a 0/1 column through the ONE merge join and
-        # summed off the checkpointed result together with the row count;
-        # the same column IS the next frontier.
+
+    # Frontier Bellman-Ford (round 5): the (min, +) relaxation is
+    # delta-propagating — an edge out of an UNCHANGED vertex proposes the
+    # same value it already proposed, and min is idempotent, so only edges
+    # out of last round's improved vertices are relaxed. Round 1's
+    # frontier is the source row itself; afterwards the relaxation cost
+    # tracks frontier-out-edges, not |settled|. Distances are monotone
+    # non-increasing, so "improved" = new < old OR vertex newly reached.
+    def step(dist, frontier, n_frontier):
         nbr = (
             e.join(
                 _state_hinted(
@@ -754,23 +707,15 @@ def weighted_sssp(
         new_val = F.least(
             F.coalesce("dist", "nbr_dist"), F.coalesce("nbr_dist", "dist")
         )
-        new_dist = checkpointed(
-            dist.join(nbr, "id", "full").select(
-                "id",
-                new_val.alias("dist"),
-                (
-                    F.col("dist").isNull()
-                    | (F.col("nbr_dist") < F.col("dist"))
-                ).cast("int").alias("chg"),
-            ),
-            lazy=True,  # convergence read = materializing action
+        return dist.join(nbr, "id", "full").select(
+            "id",
+            new_val.alias("dist"),
+            (
+                F.col("dist").isNull() | (F.col("nbr_dist") < F.col("dist"))
+            ).cast("int").alias("chg"),
         )
-        changed = new_dist.agg(F.sum("chg")).first()[0]
-        frontier = new_dist.filter(F.col("chg") == 1).select("id", "dist")
-        n_frontier = int(changed or 0)
-        dist = new_dist.drop("chg")
-        if not changed:
-            break
+
+    dist, _ = frontier_supersteps(dist, 1, max_iter, step)
     return dist.select("id", F.round(F.col("dist"), 4).alias("dist"))
 
 
@@ -790,26 +735,19 @@ def widest_path(edges: DataFrame, source: int, max_iter: int = 64) -> DataFrame:
     the data's weight domain — the source row is dropped to avoid
     convention ambiguity)."""
     e = checkpointed(edges.select("src", "dst", "weight"))
-    spark = edges.sparkSession
     # the source's outgoing edges seed the frontier directly
     cap = checkpointed(
         e.filter(F.col("src") == source)
         .groupBy(F.col("dst").alias("id"))
         .agg(F.max("weight").alias("capacity"))
     )
-    frontier = cap
-    n_frontier = cap.count()
-    for _ in range(max_iter):
-        # Frontier relaxation (round 5, same argument as weighted_sssp):
-        # the (max, min) semiring is delta-propagating — unchanged
-        # vertices re-propose values max already absorbed — so only edges
-        # out of last round's improved vertices are relaxed.
-        # Convergence folded into the superstep (ADVICE r4: this loop had
-        # the exact two-extra-jobs-per-round shape connected_components
-        # retired for a measured 2.3x): capacities are monotone
-        # non-decreasing, so "improved" = new > old OR vertex newly
-        # reached — a 0/1 chg column through the one merge join; the same
-        # column is the next frontier.
+
+    # Frontier relaxation (round 5, same argument as weighted_sssp): the
+    # (max, min) semiring is delta-propagating — unchanged vertices
+    # re-propose values max already absorbed — so only edges out of last
+    # round's improved vertices are relaxed. Capacities are monotone
+    # non-decreasing, so "improved" = new > old OR vertex newly reached.
+    def step(cap, frontier, n_frontier):
         nbr = (
             e.join(
                 _state_hinted(
@@ -828,23 +766,16 @@ def widest_path(edges: DataFrame, source: int, max_iter: int = 64) -> DataFrame:
         new_val = F.greatest(
             F.coalesce("capacity", "nbr_cap"), F.coalesce("nbr_cap", "capacity")
         )
-        new_cap = checkpointed(
-            cap.join(nbr, "id", "full").select(
-                "id",
-                new_val.alias("capacity"),
-                (
-                    F.col("capacity").isNull()
-                    | (F.col("nbr_cap") > F.col("capacity"))
-                ).cast("int").alias("chg"),
-            ),
-            lazy=True,  # convergence read = materializing action
+        return cap.join(nbr, "id", "full").select(
+            "id",
+            new_val.alias("capacity"),
+            (
+                F.col("capacity").isNull()
+                | (F.col("nbr_cap") > F.col("capacity"))
+            ).cast("int").alias("chg"),
         )
-        changed = new_cap.agg(F.sum("chg")).first()[0]
-        frontier = new_cap.filter(F.col("chg") == 1).select("id", "capacity")
-        n_frontier = int(changed or 0)
-        cap = new_cap.drop("chg")
-        if not changed:
-            break
+
+    cap, _ = frontier_supersteps(cap, cap.count(), max_iter, step)
     return cap.select("id", F.round(F.col("capacity"), 4).alias("capacity"))
 
 
@@ -1058,35 +989,28 @@ def _pagerank_loop(
     Both update expressions keep the floating-point order the
     unrolled-CTE oracles replay with per-round 6-dp rounding.
     """
-    # dst-partitioned persistent layout: the per-round contribution
-    # aggregate groups by dst, so its exchange is elided every round (see
-    # _edges_partitioned). A/B'd at sf0.1 (REPORT.md r7): median 8.62 →
-    # 7.53 s, new layout faster in every warmed rep despite running first
-    # in each alternating pair.
-    owns_layout = sym_layout is None
-    if not owns_layout:
-        # Shared SRC-partitioned symmetric layout (the CC/LPA frame,
-        # VERDICT r7 Next #7): a symmetric edge set is invariant under
-        # swapping the column names, and the swap re-keys the SAME
-        # persisted frame by what this loop calls dst — the per-round
-        # contribution aggregate stays exchange-free without a second
-        # |E| repartition+persist. Undirected only (a symmetric layout
-        # has no direction to preserve). ValueError, not assert: under
-        # ``python -O`` an assert is stripped and a directed=True call
-        # would silently return undirected ranks (ADVICE r8).
-        if directed:
-            raise ValueError("sym_layout requires directed=False")
-        e = sym_layout.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst")
-        ).filter(F.col("src") != F.col("dst"))
-    elif weight_col is None:
-        e = (
-            edges.select("src", "dst")
-            if directed
-            else symmetrize(edges, dedup=False)
-        )
-        e = _edges_partitioned(e.filter(F.col("src") != F.col("dst")), "dst")
-    else:
+    # A shared layout is symmetric, so it has no direction to preserve.
+    # ValueError, not assert: under ``python -O`` an assert is stripped
+    # and a directed=True call would silently return undirected ranks
+    # (ADVICE r8).
+    if sym_layout is not None and directed:
+        raise ValueError("sym_layout requires directed=False")
+
+    def build():
+        # dst-partitioned persistent layout: the per-round contribution
+        # aggregate groups by dst, so its exchange is elided every round
+        # (see _edges_partitioned). A/B'd at sf0.1 (REPORT.md r7): median
+        # 8.62 → 7.53 s, new layout faster in every warmed rep despite
+        # running first in each alternating pair.
+        if weight_col is None:
+            e = (
+                edges.select("src", "dst")
+                if directed
+                else symmetrize(edges, dedup=False)
+            )
+            return _edges_partitioned(
+                e.filter(F.col("src") != F.col("dst")), "dst"
+            )
         e = edges.select(
             "src", "dst", F.col(weight_col).cast("double").alias("w")
         )
@@ -1096,207 +1020,214 @@ def _pagerank_loop(
                     F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
                 )
             )
-        e = _edges_partitioned(
+        return _edges_partitioned(
             e.filter(F.col("src") != F.col("dst")), "dst", dedup=False
         )
-    vertices = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    out_deg = e.groupBy(F.col("src").alias("id")).agg(
-        (F.count("*") if weight_col is None else F.sum("w")).alias("out_deg")
-    )
-    base = vertices
-    if sources is not None:
-        src_df = e.sparkSession.createDataFrame(
-            [(int(s),) for s in set(sources)], "id long"
-        ).withColumn("r", F.lit(1.0 / len(set(sources))))
-        base = base.join(F.broadcast(src_df), "id", "left").fillna({"r": 0.0})
-    # ONE setup action (r9): the lazy-checkpointed base is materialized by
-    # the same aggregate that reads |V|, the dangling count and (with a
-    # reset vector) the round-0 dangling mass — the r7/r8 shape paid 4
-    # setup jobs (vertices checkpoint + count, base checkpoint, dangling
-    # count, ranks checkpoint) for the same scalars. vertices is
-    # single-consumer (the base join) so it needs no checkpoint of its
-    # own, and the initial ranks are a pure projection of the
-    # checkpointed base — no state to materialize separately.
-    base = checkpointed(
-        base.join(out_deg, "id", "left").fillna({"out_deg": 0}), lazy=True
-    )
-    is_dang = F.col("out_deg") == 0
-    setup = [F.count("*"), F.sum(is_dang.cast("int"))]
-    if sources is not None:
-        # initial ranks equal the reset vector, so the round-0 mass is the
-        # reset weight on dangling sources
-        setup.append(F.coalesce(F.sum(F.when(is_dang, F.col("r"))), F.lit(0.0)))
-    row = base.agg(*setup).first()
-    n = row[0]
-    if n == 0:
-        # empty edge frame: no vertices, no ranks — same empty-result
-        # convention as eigenvector_centrality (its ADVICE r4 fix),
-        # instead of 1.0/0 at the init.
-        if owns_layout:
-            e.unpersist(blocking=False)
-        return edges.sparkSession.createDataFrame(
-            [], "id long, pagerank double"
+
+    with layout_scope(build, sym_layout) as e:
+        if sym_layout is not None:
+            # Shared SRC-partitioned symmetric layout (VERDICT r7 Next
+            # #7): a symmetric edge set is invariant under swapping the
+            # column names, and the swap re-keys the SAME persisted frame
+            # by what this loop calls dst — the per-round contribution
+            # aggregate stays exchange-free without a second |E|
+            # repartition+persist.
+            e = e.select(
+                F.col("dst").alias("src"), F.col("src").alias("dst")
+            ).filter(F.col("src") != F.col("dst"))
+        vertices = (
+            e.select(F.col("src").alias("id"))
+            .union(e.select(F.col("dst").alias("id")))
+            .distinct()
         )
-    # dangling vertices (no out-edges) exist only in directed mode
-    has_danglings = directed and (row[1] or 0) > 0
-    dangling_read = F.coalesce(F.sum(F.when(is_dang, F.col("pr"))), F.lit(0.0))
-    if init_ranks is None:
-        ranks = base.withColumn(
-            "pr", F.lit(1.0 / n) if sources is None else F.col("r")
+        out_deg = e.groupBy(F.col("src").alias("id")).agg(
+            (F.count("*") if weight_col is None else F.sum("w")).alias("out_deg")
         )
-        if not has_danglings:
-            dangling_mass = 0.0
-        elif sources is None:
-            dangling_mass = row[1] * (1.0 / n)  # round 0: ranks are uniform
-        else:
-            dangling_mass = row[2]
-    else:
-        # continuation state: resolve (id, rank) by NAME when the frame
-        # carries recognizable ones (pagerank() output plugs in
-        # directly), else by position — with validation so a frame whose
-        # first two columns are not (id, rank) is rejected instead of
-        # silently misread (ADVICE r11). Missing ids fall back to the
-        # uniform 1/N so a partial init still covers every vertex; with a
-        # reset vector they get 0.0 — restart mass concentrates on the
-        # walk's reach.
-        iid, ipr = _resolve_init_ranks(init_ranks)
-        ranks = base.join(
-            _state_hinted(
-                init_ranks.select(
-                    F.col(iid).alias("id"), F.col(ipr).alias("_ipr")
-                ),
-                n,
-            ),
-            "id",
-            "left",
-        ).select(
-            *base.columns,
-            F.coalesce(
-                "_ipr", F.lit(1.0 / n if sources is None else 0.0)
-            ).alias("pr"),
+        base = vertices
+        if sources is not None:
+            src_df = e.sparkSession.createDataFrame(
+                [(int(s),) for s in set(sources)], "id long"
+            ).withColumn("r", F.lit(1.0 / len(set(sources))))
+            base = base.join(F.broadcast(src_df), "id", "left").fillna({"r": 0.0})
+        # ONE setup action (r9): the lazy-checkpointed base is materialized by
+        # the same aggregate that reads |V|, the dangling count and (with a
+        # reset vector) the round-0 dangling mass — the r7/r8 shape paid 4
+        # setup jobs (vertices checkpoint + count, base checkpoint, dangling
+        # count, ranks checkpoint) for the same scalars. vertices is
+        # single-consumer (the base join) so it needs no checkpoint of its
+        # own, and the initial ranks are a pure projection of the
+        # checkpointed base — no state to materialize separately.
+        base = checkpointed(
+            base.join(out_deg, "id", "left").fillna({"out_deg": 0}), lazy=True
         )
-        # provided init: the round-0 mass has no closed form — one setup
-        # action over the initial state (docstring contract)
-        dangling_mass = (
-            ranks.agg(dangling_read).first()[0] if has_danglings else 0.0
-        )
-    # Dangling mass is a driver-side SCALAR, not a broadcast frame
-    # (VERDICT r6 Next #5): it is refreshed each round from the same 1-row
-    # action that reads the convergence delta, then enters the next
-    # superstep as a literal — the old shape crossJoin(broadcast(agg))
-    # re-scanned the |V| state a second time inside every round's job and
-    # added a broadcast exchange per round. A per-round scalar requires a
-    # per-round materialization, so dangling mode pins cadence 1 (below
-    # 4M vertices _state_cadence pins 1 anyway; past that, a directed
-    # graph with danglings pays one checkpoint per round — the price of
-    # per-round-exact mass redistribution).
-    k = 1 if has_danglings else _state_cadence(n)
-    # k == 1 (broadcast-sized state / danglings — every round materializes
-    # anyway): join the update against RANKS instead of base so |Δpr|
-    # rides the superstep select and the delta is a cheap scan of the
-    # checkpointed frame — no per-round delta join (the eigenvector
-    # pattern). k > 1 (shuffle-hash state): referencing ranks twice per
-    # superstep would compound the unmaterialized plan 2^k, so keep the
-    # base-join shape and pay one delta join per CHECKPOINTED round only.
-    fold_delta = k == 1 and tol is not None
-    share = (
-        F.col("pr") / F.col("out_deg")
-        if weight_col is None
-        else F.col("pr") * F.col("w") / F.col("out_deg")
-    )
-    prev_ck = ranks  # last checkpointed state, for the k>1 delta
-    converged = False  # True ⇔ the loop broke after a materializing read
-    LAST_STATS["pagerank_rounds"] = 0
-    for it in range(max_iter):
-        LAST_STATS["pagerank_rounds"] += 1
-        contribs = (
-            e.join(_state_hinted(ranks.withColumnRenamed("id", "src"), n), "src")
-            .select(F.col("dst").alias("id"), share.alias("c"))
-            .groupBy("id")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        updated = (ranks if fold_delta else base).join(contribs, "id", "left")
-        inflow = F.coalesce("inflow", F.lit(0.0))
-        if sources is None:
-            new_pr = F.lit((1.0 - damping) / n) + F.lit(damping) * (
-                inflow + F.lit(dangling_mass / n)
+        is_dang = F.col("out_deg") == 0
+        setup = [F.count("*"), F.sum(is_dang.cast("int"))]
+        if sources is not None:
+            # initial ranks equal the reset vector, so the round-0 mass is the
+            # reset weight on dangling sources
+            setup.append(F.coalesce(F.sum(F.when(is_dang, F.col("r"))), F.lit(0.0)))
+        row = base.agg(*setup).first()
+        n = row[0]
+        if n == 0:
+            # empty edge frame: no vertices, no ranks — same empty-result
+            # convention as eigenvector_centrality (its ADVICE r4 fix),
+            # instead of 1.0/0 at the init.
+            return edges.sparkSession.createDataFrame(
+                [], "id long, pagerank double"
             )
-        else:
-            new_pr = F.lit((1.0 - damping) + damping * dangling_mass) * F.col(
-                "r"
-            ) + F.lit(damping) * inflow
-        if round_dp is not None:
-            new_pr = F.round(new_pr, round_dp)
-        if fold_delta:
-            ranks = checkpointed(
-                updated.select(
-                    *base.columns,
-                    new_pr.alias("pr"),
-                    F.abs(new_pr - F.col("pr")).alias("d"),
-                ),
-                lazy=True,  # the delta/dangling read below materializes
+        # dangling vertices (no out-edges) exist only in directed mode
+        has_danglings = directed and (row[1] or 0) > 0
+        dangling_read = F.coalesce(F.sum(F.when(is_dang, F.col("pr"))), F.lit(0.0))
+        if init_ranks is None:
+            ranks = base.withColumn(
+                "pr", F.lit(1.0 / n) if sources is None else F.col("r")
             )
-            # ONE action reads both the L1 delta and (when needed) the
-            # next round's dangling mass off the just-materialized state.
-            aggs = [F.sum("d").alias("delta")]
-            if has_danglings:
-                aggs.append(dangling_read)
-            row = ranks.agg(*aggs).first()
-            delta = row[0]
-            if has_danglings:
-                dangling_mass = row[1]
-            ranks = ranks.drop("d")
-            if it < max_iter - 1 and delta is not None and delta < tol:
-                converged = True
-                break
-            continue
-        ranks = updated.select(*base.columns, new_pr.alias("pr"))
-        if ((it + 1) % k == 0) or it == max_iter - 1:
-            # lazy: whichever comes first — the dangling/delta read below
-            # or the next superstep's state join — is the materializing
-            # action; the logical plan is truncated either way
-            ranks = checkpointed(ranks, lazy=True)
-            if has_danglings and it < max_iter - 1:
-                # tol=None path (exact-maxIter contract): the mass refresh
-                # is the round's single 1-row action
-                dangling_mass = ranks.agg(dangling_read).first()[0]
-            # L1-delta early exit: power iteration (global or personalized)
-            # is a d-contraction, so a sub-tol delta at a checkpointed
-            # round bounds all remaining movement
-            if tol is not None and it < max_iter - 1:
-                delta = (
-                    ranks.select("id", "pr")
-                    .join(
-                        _state_hinted(
-                            prev_ck.select("id", F.col("pr").alias("pp")), n
-                        ),
-                        "id",
-                    )
-                    .agg(F.sum(F.abs(F.col("pr") - F.col("pp"))))
-                    .first()[0]
+            if not has_danglings:
+                dangling_mass = 0.0
+            elif sources is None:
+                dangling_mass = row[1] * (1.0 / n)  # round 0: ranks are uniform
+            else:
+                dangling_mass = row[2]
+        else:
+            # continuation state: resolve (id, rank) by NAME when the frame
+            # carries recognizable ones (pagerank() output plugs in
+            # directly), else by position — with validation so a frame whose
+            # first two columns are not (id, rank) is rejected instead of
+            # silently misread (ADVICE r11). Missing ids fall back to the
+            # uniform 1/N so a partial init still covers every vertex; with a
+            # reset vector they get 0.0 — restart mass concentrates on the
+            # walk's reach.
+            iid, ipr = _resolve_init_ranks(init_ranks)
+            ranks = base.join(
+                _state_hinted(
+                    init_ranks.select(
+                        F.col(iid).alias("id"), F.col(ipr).alias("_ipr")
+                    ),
+                    n,
+                ),
+                "id",
+                "left",
+            ).select(
+                *base.columns,
+                F.coalesce(
+                    "_ipr", F.lit(1.0 / n if sources is None else 0.0)
+                ).alias("pr"),
+            )
+            # provided init: the round-0 mass has no closed form — one setup
+            # action over the initial state (docstring contract)
+            dangling_mass = (
+                ranks.agg(dangling_read).first()[0] if has_danglings else 0.0
+            )
+        # Dangling mass is a driver-side SCALAR, not a broadcast frame
+        # (VERDICT r6 Next #5): it is refreshed each round from the same 1-row
+        # action that reads the convergence delta, then enters the next
+        # superstep as a literal — the old shape crossJoin(broadcast(agg))
+        # re-scanned the |V| state a second time inside every round's job and
+        # added a broadcast exchange per round. A per-round scalar requires a
+        # per-round materialization, so dangling mode pins cadence 1 (below
+        # 4M vertices _state_cadence pins 1 anyway; past that, a directed
+        # graph with danglings pays one checkpoint per round — the price of
+        # per-round-exact mass redistribution).
+        k = 1 if has_danglings else _state_cadence(n)
+        # k == 1 (broadcast-sized state / danglings — every round materializes
+        # anyway): join the update against RANKS instead of base so |Δpr|
+        # rides the superstep select and the delta is a cheap scan of the
+        # checkpointed frame — no per-round delta join (the eigenvector
+        # pattern). k > 1 (shuffle-hash state): referencing ranks twice per
+        # superstep would compound the unmaterialized plan 2^k, so keep the
+        # base-join shape and pay one delta join per CHECKPOINTED round only.
+        fold_delta = k == 1 and tol is not None
+        share = (
+            F.col("pr") / F.col("out_deg")
+            if weight_col is None
+            else F.col("pr") * F.col("w") / F.col("out_deg")
+        )
+        prev_ck = ranks  # last checkpointed state, for the k>1 delta
+        converged = False  # True ⇔ the loop broke after a materializing read
+        LAST_STATS["pagerank_rounds"] = 0
+        for it in range(max_iter):
+            LAST_STATS["pagerank_rounds"] += 1
+            contribs = (
+                e.join(_state_hinted(ranks.withColumnRenamed("id", "src"), n), "src")
+                .select(F.col("dst").alias("id"), share.alias("c"))
+                .groupBy("id")
+                .agg(F.sum("c").alias("inflow"))
+            )
+            updated = (ranks if fold_delta else base).join(contribs, "id", "left")
+            inflow = F.coalesce("inflow", F.lit(0.0))
+            if sources is None:
+                new_pr = F.lit((1.0 - damping) / n) + F.lit(damping) * (
+                    inflow + F.lit(dangling_mass / n)
                 )
-                if delta is not None and delta < tol:
+            else:
+                new_pr = F.lit((1.0 - damping) + damping * dangling_mass) * F.col(
+                    "r"
+                ) + F.lit(damping) * inflow
+            if round_dp is not None:
+                new_pr = F.round(new_pr, round_dp)
+            if fold_delta:
+                ranks = checkpointed(
+                    updated.select(
+                        *base.columns,
+                        new_pr.alias("pr"),
+                        F.abs(new_pr - F.col("pr")).alias("d"),
+                    ),
+                    lazy=True,  # the delta/dangling read below materializes
+                )
+                # ONE action reads both the L1 delta and (when needed) the
+                # next round's dangling mass off the just-materialized state.
+                aggs = [F.sum("d").alias("delta")]
+                if has_danglings:
+                    aggs.append(dangling_read)
+                row = ranks.agg(*aggs).first()
+                delta = row[0]
+                if has_danglings:
+                    dangling_mass = row[1]
+                ranks = ranks.drop("d")
+                if it < max_iter - 1 and delta is not None and delta < tol:
                     converged = True
                     break
-            prev_ck = ranks
-    if not fold_delta and not converged:
-        # tol=None / cadence>1 run-to-max_iter path: the final round's
-        # lazy checkpoint got no follow-up read (dangling/delta reads are
-        # gated off the last round), so materialize it NOW — needed
-        # regardless of who owns the edge cache: with an OWNED layout the
-        # caller's first action would silently re-run the last superstep
-        # plus the layout build against the just-unpersisted frame
-        # (ADVICE r8); with a CALLER-provided sym_layout the cache stays
-        # live but the last superstep would still re-run against it on
-        # the caller's first action (ADVICE r9 — hoisted out of
-        # owns_layout).
-        ranks.agg(F.count(F.lit(1))).first()
-    if owns_layout:  # shared layouts outlive the call (caller-owned)
-        e.unpersist(blocking=False)  # ranks is materialized; cache is dead
+                continue
+            ranks = updated.select(*base.columns, new_pr.alias("pr"))
+            if ((it + 1) % k == 0) or it == max_iter - 1:
+                # lazy: whichever comes first — the dangling/delta read below
+                # or the next superstep's state join — is the materializing
+                # action; the logical plan is truncated either way
+                ranks = checkpointed(ranks, lazy=True)
+                if has_danglings and it < max_iter - 1:
+                    # tol=None path (exact-maxIter contract): the mass refresh
+                    # is the round's single 1-row action
+                    dangling_mass = ranks.agg(dangling_read).first()[0]
+                # L1-delta early exit: power iteration (global or personalized)
+                # is a d-contraction, so a sub-tol delta at a checkpointed
+                # round bounds all remaining movement
+                if tol is not None and it < max_iter - 1:
+                    delta = (
+                        ranks.select("id", "pr")
+                        .join(
+                            _state_hinted(
+                                prev_ck.select("id", F.col("pr").alias("pp")), n
+                            ),
+                            "id",
+                        )
+                        .agg(F.sum(F.abs(F.col("pr") - F.col("pp"))))
+                        .first()[0]
+                    )
+                    if delta is not None and delta < tol:
+                        converged = True
+                        break
+                prev_ck = ranks
+        if not fold_delta and not converged:
+            # tol=None / cadence>1 run-to-max_iter path: the final round's
+            # lazy checkpoint got no follow-up read (dangling/delta reads are
+            # gated off the last round), so materialize it NOW — needed
+            # regardless of who owns the edge cache: with an OWNED layout the
+            # caller's first action would silently re-run the last superstep
+            # plus the layout build against the just-unpersisted frame
+            # (ADVICE r8); with a CALLER-provided sym_layout the cache stays
+            # live but the last superstep would still re-run against it on
+            # the caller's first action (ADVICE r9).
+            ranks.agg(F.count(F.lit(1))).first()
     return ranks.select("id", F.round(F.col("pr"), 6).alias("pagerank"))
 
 
@@ -1625,57 +1556,48 @@ def eigenvector_centrality(
     is what the ring oracle value-checks. Edge layout: src-partitioned
     persist — the per-round A·x aggregate groups by src, so its exchange
     is elided every round (the r7 loop layout, brought over from the
-    katz A/B: 0.65x on the rings fixture, REPORT.md r11); ``sym_layout``
-    is the shared-layout contract of :func:`katz_centrality` (r12)."""
-    owns_layout = sym_layout is None
-    sym = (
-        _edges_partitioned(symmetrize(edges, dedup=False), "src")
-        if owns_layout
-        else sym_layout
-    )
-    vertices = sym.select(F.col("src").alias("id")).distinct()
-    vertices = checkpointed(vertices, lazy=True)
-    n = vertices.count()  # the materializing action (r9 setup fold)
-    if n == 0:
-        # empty edge frame: no vertices, no centrality — mirror
-        # core_numbers' empty-result convention instead of dividing by
-        # sqrt(0) (ADVICE r4).
-        if owns_layout:
-            sym.unpersist(blocking=False)
-        return edges.sparkSession.createDataFrame(
-            [], "id long, eigenvector double"
-        )
-    x = checkpointed(vertices.withColumn("x", F.lit(1.0 / (n ** 0.5))))
-    for _ in range(max_iter):
-        ax = (
-            sym.join(_state_hinted(x, n), sym.dst == x.id)
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.sum("x").alias("ax"))
-        )
-        raw = x.join(ax, "id", "left").select(
-            "id", "x", (F.col("x") + F.coalesce("ax", F.lit(0.0))).alias("y")
-        )
-        norm = raw.agg(F.sqrt(F.sum(F.col("y") * F.col("y"))).alias("nrm"))
-        # L1 convergence delta folded into the checkpointed frame (the
-        # chg-column pattern, ADVICE r4): |new - old| rides the same
-        # select, summed off the materialized result — one cheap scan of
-        # |V| rows per round, and the loop exits as soon as the iterate
-        # is stationary (regular graphs converge at round 1) instead of
-        # always burning max_iter supersteps.
-        new_x = checkpointed(
-            raw.crossJoin(F.broadcast(norm)).select(
-                "id",
-                (F.col("y") / F.col("nrm")).alias("x"),
-                F.abs(F.col("y") / F.col("nrm") - F.col("x")).alias("d"),
-            ),
-            lazy=True,  # the delta read below materializes (one job)
-        )
-        delta = new_x.agg(F.sum("d")).first()[0]
-        x = new_x.drop("d")
-        if delta < n * 1e-7:
-            break
-    if owns_layout:  # x materialized by the delta read
-        sym.unpersist(blocking=False)
+    katz A/B: 0.65x on the rings fixture, REPORT.md r11); ``sym_layout``:
+    the shared layout (module docstring)."""
+    with _src_layout(edges, sym_layout) as sym:
+        vertices = sym.select(F.col("src").alias("id")).distinct()
+        vertices = checkpointed(vertices, lazy=True)
+        n = vertices.count()  # the materializing action (r9 setup fold)
+        if n == 0:
+            # empty edge frame: no vertices, no centrality — mirror
+            # core_numbers' empty-result convention instead of dividing by
+            # sqrt(0) (ADVICE r4).
+            return edges.sparkSession.createDataFrame(
+                [], "id long, eigenvector double"
+            )
+        x = checkpointed(vertices.withColumn("x", F.lit(1.0 / (n ** 0.5))))
+        for _ in range(max_iter):
+            ax = (
+                sym.join(_state_hinted(x, n), sym.dst == x.id)
+                .groupBy(F.col("src").alias("id"))
+                .agg(F.sum("x").alias("ax"))
+            )
+            raw = x.join(ax, "id", "left").select(
+                "id", "x", (F.col("x") + F.coalesce("ax", F.lit(0.0))).alias("y")
+            )
+            norm = raw.agg(F.sqrt(F.sum(F.col("y") * F.col("y"))).alias("nrm"))
+            # L1 convergence delta folded into the checkpointed frame (the
+            # chg-column pattern, ADVICE r4): |new - old| rides the same
+            # select, summed off the materialized result — one cheap scan of
+            # |V| rows per round, and the loop exits as soon as the iterate
+            # is stationary (regular graphs converge at round 1) instead of
+            # always burning max_iter supersteps.
+            new_x = checkpointed(
+                raw.crossJoin(F.broadcast(norm)).select(
+                    "id",
+                    (F.col("y") / F.col("nrm")).alias("x"),
+                    F.abs(F.col("y") / F.col("nrm") - F.col("x")).alias("d"),
+                ),
+                lazy=True,  # the delta read below materializes (one job)
+            )
+            delta = new_x.agg(F.sum("d")).first()[0]
+            x = new_x.drop("d")
+            if delta < n * 1e-7:
+                break
     return x.select("id", F.round("x", 6).alias("eigenvector"))
 
 
@@ -1714,75 +1636,67 @@ def luby_mis(
     the checkpoint read (one action per round). Edge layout:
     src-partitioned persist — the neighbor-min aggregate and both
     winner-side joins key on src (the katz/eigenvector r11 A/B);
-    ``sym_layout`` is the same caller-held shared-layout contract as
-    :func:`katz_centrality` (r12)."""
-    owns_layout = sym_layout is None
-    sym = (
-        _edges_partitioned(symmetrize(edges, dedup=False), "src")
-        if owns_layout
-        else sym_layout
-    )
-    pr = F.concat(
-        F.md5(F.col("id").cast("string")),
-        F.lit("-"),
-        F.col("id").cast("string"),
-    )
-    active = checkpointed(
-        sym.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("pr", pr),
-        lazy=True,
-    )
-    n = active.count()
-    LAST_STATS["mis_rounds"] = 0
-    mis_parts: list[DataFrame] = []
-    for rnd in range(1, max_iter + 1):
-        if n == 0:
-            break
-        LAST_STATS["mis_rounds"] = rnd
-        # active-induced neighbor minimum (both endpoints must be active:
-        # src via the final join back onto `active`, dst via this join)
-        nb_min = (
-            sym.join(
-                _state_hinted(active.withColumnRenamed("id", "dst"), n).select(
-                    "dst", F.col("pr").alias("npr")
-                ),
-                "dst",
-            )
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.min("npr").alias("mn"))
-        )
-        winners = (
-            active.join(nb_min, "id", "left")
-            .filter(F.col("mn").isNull() | (F.col("pr") < F.col("mn")))
-            .select("id")
-        )
-        # LAZY (VERDICT r11 Next #3): the winners frame sits inside the
-        # next active frame's plan (anti-join + neighborhood semi-join),
-        # so the drain-check count below computes and checkpoints BOTH —
-        # one driver action per round instead of two (sf0.1 bench line
-        # 4.9 → 3.2-3.9 s together with the shared rings layout;
-        # host-noise band ±30%, REPORT r12).
-        winners = checkpointed(
-            winners.withColumn("round", F.lit(rnd).cast("int")), lazy=True
-        )
-        mis_parts.append(winners)
-        # remove winners + their neighborhoods from the active set
-        nbrs = (
-            sym.join(
-                winners.select(F.col("id").alias("src")), "src", "left_semi"
-            )
-            .select(F.col("dst").alias("id"))
-            .distinct()
+    ``sym_layout``: the shared layout (module docstring)."""
+    with _src_layout(edges, sym_layout) as sym:
+        pr = F.concat(
+            F.md5(F.col("id").cast("string")),
+            F.lit("-"),
+            F.col("id").cast("string"),
         )
         active = checkpointed(
-            active.join(winners, "id", "left_anti").join(nbrs, "id", "left_anti"),
+            sym.select(F.col("src").alias("id"))
+            .distinct()
+            .withColumn("pr", pr),
             lazy=True,
         )
-        n = active.count()  # drain check = the materializing action
-    LAST_STATS["mis_residual"] = int(n)  # 0 ⇔ the set is maximal
-    if owns_layout:  # every winners frame is checkpointed
-        sym.unpersist(blocking=False)
+        n = active.count()
+        LAST_STATS["mis_rounds"] = 0
+        mis_parts: list[DataFrame] = []
+        for rnd in range(1, max_iter + 1):
+            if n == 0:
+                break
+            LAST_STATS["mis_rounds"] = rnd
+            # active-induced neighbor minimum (both endpoints must be active:
+            # src via the final join back onto `active`, dst via this join)
+            nb_min = (
+                sym.join(
+                    _state_hinted(active.withColumnRenamed("id", "dst"), n).select(
+                        "dst", F.col("pr").alias("npr")
+                    ),
+                    "dst",
+                )
+                .groupBy(F.col("src").alias("id"))
+                .agg(F.min("npr").alias("mn"))
+            )
+            winners = (
+                active.join(nb_min, "id", "left")
+                .filter(F.col("mn").isNull() | (F.col("pr") < F.col("mn")))
+                .select("id")
+            )
+            # LAZY (VERDICT r11 Next #3): the winners frame sits inside the
+            # next active frame's plan (anti-join + neighborhood semi-join),
+            # so the drain-check count below computes and checkpoints BOTH —
+            # one driver action per round instead of two (sf0.1 bench line
+            # 4.9 → 3.2-3.9 s together with the shared rings layout;
+            # host-noise band ±30%, REPORT r12).
+            winners = checkpointed(
+                winners.withColumn("round", F.lit(rnd).cast("int")), lazy=True
+            )
+            mis_parts.append(winners)
+            # remove winners + their neighborhoods from the active set
+            nbrs = (
+                sym.join(
+                    winners.select(F.col("id").alias("src")), "src", "left_semi"
+                )
+                .select(F.col("dst").alias("id"))
+                .distinct()
+            )
+            active = checkpointed(
+                active.join(winners, "id", "left_anti").join(nbrs, "id", "left_anti"),
+                lazy=True,
+            )
+            n = active.count()  # drain check = the materializing action
+        LAST_STATS["mis_residual"] = int(n)  # 0 ⇔ the set is maximal
     out = mis_parts[0] if mis_parts else edges.sparkSession.createDataFrame(
         [], "id long, round int"
     )
@@ -1929,8 +1843,6 @@ def boruvka_mst(
             lazy=True,
         )
         comp.count()  # materialize before the next round's double consume
-    if can_layout is None:
-        can.unpersist(blocking=False)
     out = out_parts[0] if out_parts else edges.sparkSession.createDataFrame(
         [], "src long, dst long, w double"
     )
@@ -2084,78 +1996,65 @@ def katz_centrality(
     Edge layout: src-partitioned persist — the per-round aggregate
     groups by src, so its exchange is elided every round (the r7 loop
     layout; A/B'd on the benched rings query, REPORT.md r11).
-    ``sym_layout`` (r12, the pagerank contract): a caller-held persisted
-    frame EXACTLY equal to
-    ``_edges_partitioned(symmetrize(edges, dedup=False), "src")`` —
-    shared across the algorithms reading the same graph (katz / MIS /
-    eigenvector on the rings fixture); the callee then neither builds
-    nor unpersists it."""
-    owns_layout = sym_layout is None
-    sym = (
-        _edges_partitioned(symmetrize(edges, dedup=False), "src")
-        if owns_layout
-        else sym_layout
-    )
-    vertices = sym.select(F.col("src").alias("id")).distinct()
-    vertices = checkpointed(vertices, lazy=True)
-    n = vertices.count()
-    if n == 0:
-        if owns_layout:
-            sym.unpersist(blocking=False)
-        return edges.sparkSession.createDataFrame([], "id long, katz double")
-    x = checkpointed(vertices.withColumn("x", F.lit(0.0)))
-    if tol is None:
-        # Fixed-round path (VERDICT r11 Next #3 — the benched rings twin
-        # runs here): no convergence test means no per-round driver
-        # action. The update references the state exactly ONCE — on the
-        # symmetrized graph every vertex appears as src AND dst, so the
-        # in-flow aggregate covers ALL vertices and the old x-side left
-        # join/coalesce (the zero-in-degree safety net) never fires —
-        # so rounds CHAIN into one logical plan (linear depth, each
-        # broadcast sub-job executes its round exactly once) with a
-        # lineage-hygiene checkpoint every 4th round — Catalyst then
-        # plans 4 rounds at a time instead of once per round, and the
-        # single count below is the only driver action after setup.
-        # Measured at sf0.1 on the rings fixture (8 rounds), interleaved
-        # A/B including the layout build: old shape 4.3-4.4 s → this
-        # shape 2.9-3.3 s (bench-context line ~4.5 s under host
-        # contention; REPORT r12).
-        for it in range(max_iter):
-            y = F.lit(alpha) * F.col("ax") + F.lit(beta)
-            if round_dp is not None:
-                y = F.round(y, round_dp)
-            x = (
-                sym.join(_state_hinted(x, n), sym.dst == x.id)
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.sum("x").alias("ax"))
-                .select("id", y.alias("x"))
-            )
-            if (it + 1) % 4 == 0 and it < max_iter - 1:
-                x = checkpointed(x, lazy=True)
-        x = checkpointed(x, lazy=True)
-        x.agg(F.count(F.lit(1))).first()  # materialize the final state
-    else:
-        for it in range(max_iter):
-            ax = (
-                sym.join(_state_hinted(x, n), sym.dst == x.id)
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.sum("x").alias("ax"))
-            )
-            y = F.lit(alpha) * F.coalesce("ax", F.lit(0.0)) + F.lit(beta)
-            if round_dp is not None:
-                y = F.round(y, round_dp)
-            new_x = checkpointed(
-                x.join(ax, "id", "left").select(
-                    "id", y.alias("x"), F.abs(y - F.col("x")).alias("d")
-                ),
-                lazy=True,  # the delta read below materializes (one job)
-            )
-            delta = new_x.agg(F.sum("d")).first()[0]
-            x = new_x.drop("d")
-            if it < max_iter - 1 and delta < tol:
-                break
-    if owns_layout:  # x is materialized either way
-        sym.unpersist(blocking=False)
+    ``sym_layout``: the shared layout (module docstring; katz / MIS /
+    eigenvector share one on the rings fixture)."""
+    with _src_layout(edges, sym_layout) as sym:
+        vertices = sym.select(F.col("src").alias("id")).distinct()
+        vertices = checkpointed(vertices, lazy=True)
+        n = vertices.count()
+        if n == 0:
+            return edges.sparkSession.createDataFrame([], "id long, katz double")
+        x = checkpointed(vertices.withColumn("x", F.lit(0.0)))
+        if tol is None:
+            # Fixed-round path (VERDICT r11 Next #3 — the benched rings twin
+            # runs here): no convergence test means no per-round driver
+            # action. The update references the state exactly ONCE — on the
+            # symmetrized graph every vertex appears as src AND dst, so the
+            # in-flow aggregate covers ALL vertices and the old x-side left
+            # join/coalesce (the zero-in-degree safety net) never fires —
+            # so rounds CHAIN into one logical plan (linear depth, each
+            # broadcast sub-job executes its round exactly once) with a
+            # lineage-hygiene checkpoint every 4th round — Catalyst then
+            # plans 4 rounds at a time instead of once per round, and the
+            # single count below is the only driver action after setup.
+            # Measured at sf0.1 on the rings fixture (8 rounds), interleaved
+            # A/B including the layout build: old shape 4.3-4.4 s → this
+            # shape 2.9-3.3 s (bench-context line ~4.5 s under host
+            # contention; REPORT r12).
+            for it in range(max_iter):
+                y = F.lit(alpha) * F.col("ax") + F.lit(beta)
+                if round_dp is not None:
+                    y = F.round(y, round_dp)
+                x = (
+                    sym.join(_state_hinted(x, n), sym.dst == x.id)
+                    .groupBy(F.col("src").alias("id"))
+                    .agg(F.sum("x").alias("ax"))
+                    .select("id", y.alias("x"))
+                )
+                if (it + 1) % 4 == 0 and it < max_iter - 1:
+                    x = checkpointed(x, lazy=True)
+            x = checkpointed(x, lazy=True)
+            x.agg(F.count(F.lit(1))).first()  # materialize the final state
+        else:
+            for it in range(max_iter):
+                ax = (
+                    sym.join(_state_hinted(x, n), sym.dst == x.id)
+                    .groupBy(F.col("src").alias("id"))
+                    .agg(F.sum("x").alias("ax"))
+                )
+                y = F.lit(alpha) * F.coalesce("ax", F.lit(0.0)) + F.lit(beta)
+                if round_dp is not None:
+                    y = F.round(y, round_dp)
+                new_x = checkpointed(
+                    x.join(ax, "id", "left").select(
+                        "id", y.alias("x"), F.abs(y - F.col("x")).alias("d")
+                    ),
+                    lazy=True,  # the delta read below materializes (one job)
+                )
+                delta = new_x.agg(F.sum("d")).first()[0]
+                x = new_x.drop("d")
+                if it < max_iter - 1 and delta < tol:
+                    break
     if normalized:
         norm = x.agg(F.sqrt(F.sum(F.col("x") * F.col("x"))).alias("nrm"))
         x = x.crossJoin(F.broadcast(norm)).select(
@@ -2199,63 +2098,54 @@ def label_spreading(
     placement-exact, not merely rounding-absorbed (a double-state
     variant measured 6th-decimal flips under a 7-partition layout).
     ``seeds``: ``(id, class)`` with class in ``[0, n_classes)``."""
-    owns_layout = sym_layout is None
-    sym = (
-        _edges_partitioned(symmetrize(edges, dedup=False), "src")
-        if owns_layout
-        else sym_layout
-    )
-    fcols = [f"f{c}" for c in range(n_classes)]
-    scale = 10 ** round_dp if round_dp is not None else None
-    deg = sym.groupBy(F.col("src").alias("id")).agg(
-        F.count("*").alias("deg")
-    )
-    one = F.lit(scale).cast("long") if scale else F.lit(1.0)
-    onehot = seeds.select(
-        "id",
-        *[
-            F.when(F.col("class") == c, one).otherwise(
-                F.lit(0).cast("long") if scale else F.lit(0.0)
-            ).alias(f"y{c}")
-            for c in range(n_classes)
-        ],
-    )
-    base = checkpointed(
-        deg.join(onehot, "id", "left").fillna(
-            {f"y{c}": 0 for c in range(n_classes)}
-        ),
-        lazy=True,
-    )
-    n = base.count()
-    if n == 0:
-        if owns_layout:
-            sym.unpersist(blocking=False)
-        schema = "id long, " + ", ".join(f"{f} double" for f in fcols)
-        return edges.sparkSession.createDataFrame([], schema + ", label int")
-    state = base.select(
-        "id", *[F.col(f"y{c}").alias(f"f{c}") for c in range(n_classes)]
-    )
-    for it in range(max_iter):
-        agg = (
-            sym.join(_state_hinted(state, n), sym.dst == state.id)
-            .groupBy(F.col("src").alias("id"))
-            .agg(*[F.sum(f).alias(f"s{c}") for c, f in enumerate(fcols)])
+    with _src_layout(edges, sym_layout) as sym:
+        fcols = [f"f{c}" for c in range(n_classes)]
+        scale = 10 ** round_dp if round_dp is not None else None
+        deg = sym.groupBy(F.col("src").alias("id")).agg(
+            F.count("*").alias("deg")
         )
-        upd = []
-        for c in range(n_classes):
-            e = F.lit(alpha) * F.coalesce(
-                F.col(f"s{c}"), F.lit(0)
-            ) / F.col("deg") + F.lit(1.0 - alpha) * F.col(f"y{c}")
-            if scale:
-                e = F.round(e, 0).cast("long")
-            upd.append(e.alias(f"f{c}"))
-        state = base.join(agg, "id", "left").select("id", *upd)
-        if (it + 1) % 4 == 0 and it < max_iter - 1:
-            state = checkpointed(state, lazy=True)
-    state = checkpointed(state, lazy=True)
-    state.agg(F.count(F.lit(1))).first()  # materialize the final state
-    if owns_layout:
-        sym.unpersist(blocking=False)
+        one = F.lit(scale).cast("long") if scale else F.lit(1.0)
+        onehot = seeds.select(
+            "id",
+            *[
+                F.when(F.col("class") == c, one).otherwise(
+                    F.lit(0).cast("long") if scale else F.lit(0.0)
+                ).alias(f"y{c}")
+                for c in range(n_classes)
+            ],
+        )
+        base = checkpointed(
+            deg.join(onehot, "id", "left").fillna(
+                {f"y{c}": 0 for c in range(n_classes)}
+            ),
+            lazy=True,
+        )
+        n = base.count()
+        if n == 0:
+            schema = "id long, " + ", ".join(f"{f} double" for f in fcols)
+            return edges.sparkSession.createDataFrame([], schema + ", label int")
+        state = base.select(
+            "id", *[F.col(f"y{c}").alias(f"f{c}") for c in range(n_classes)]
+        )
+        for it in range(max_iter):
+            agg = (
+                sym.join(_state_hinted(state, n), sym.dst == state.id)
+                .groupBy(F.col("src").alias("id"))
+                .agg(*[F.sum(f).alias(f"s{c}") for c, f in enumerate(fcols)])
+            )
+            upd = []
+            for c in range(n_classes):
+                e = F.lit(alpha) * F.coalesce(
+                    F.col(f"s{c}"), F.lit(0)
+                ) / F.col("deg") + F.lit(1.0 - alpha) * F.col(f"y{c}")
+                if scale:
+                    e = F.round(e, 0).cast("long")
+                upd.append(e.alias(f"f{c}"))
+            state = base.join(agg, "id", "left").select("id", *upd)
+            if (it + 1) % 4 == 0 and it < max_iter - 1:
+                state = checkpointed(state, lazy=True)
+        state = checkpointed(state, lazy=True)
+        state.agg(F.count(F.lit(1))).first()  # materialize the final state
     label = F.lit(0)
     best = F.col("f0")
     for c in range(1, n_classes):
@@ -2521,8 +2411,7 @@ def neighborhood_function(
     are ~2^lgk bytes wide, so the broadcast gate that is right for
     (long, long) vertex states mis-prices this frame (the r14
     lesson)."""
-    owns_layout = sym_layout is None
-    if owns_layout:
+    if sym_layout is None:
         # Private layout goes through localCheckpoint, NOT persist():
         # CacheManager is plan-keyed (ADVICE r8/r14), so persisting +
         # unpersisting a plan byte-identical to the shared
@@ -2964,8 +2853,6 @@ def hits(
     per-half-step driver actions — the telemetry the action-fold test
     asserts on.
     """
-    from pyspark import StorageLevel
-
     if n_iter < 1:
         # the final densify joins the last auth half-step, which exists
         # only after one round
@@ -2985,60 +2872,55 @@ def hits(
     # (_adaptive_edge_parts). A/B at sf0.1 (3 reps, 32 cores): 5.2-5.7 s
     # → 4.8-5.0 s warm, identical values; per-half-step exchanges 1 → 0.
     d = checkpointed(d)  # one distinct pass feeds the count + both layouts
-    n_e = d.count()
-    e_auth = d.repartition(
-        _adaptive_edge_parts(n_e, edges.sparkSession), "dst"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    e_hub = d.repartition(
-        _adaptive_edge_parts(n_e, edges.sparkSession), "src"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    verts = (
-        e_auth.select(F.col("src").alias("id"))
-        .union(e_auth.select("dst"))
-        .distinct()
-    )
-    verts = checkpointed(verts, lazy=True)
-    n = verts.count()  # the materializing action (r9 setup fold)
-    if n == 0:
-        e_auth.unpersist(blocking=False)
-        e_hub.unpersist(blocking=False)
-        return edges.sparkSession.createDataFrame(
-            [], "id long, hub double, auth double"
-        )
-    hub = verts.withColumn("hub", F.lit(1.0))
-    auth = None
-    LAST_STATS["hits_actions"] = 0
-
-    def _half(state: DataFrame, val: str, join_on: str, group_to: str):
-        """One half-step: sum ``val`` over ``join_on``-matched edges onto
-        ``group_to`` endpoints, L2-normalize, round 6 dp — one action,
-        sparse state (absent id ⇔ score 0). Probes the layout whose
-        partitioning key is the AGGREGATE key (``group_to``) so the keyed
-        sum needs no exchange."""
-        e = e_auth if group_to == "dst" else e_hub
-        summed = (
-            e.join(_state_hinted(state, n), F.col(join_on) == state["id"])
-            .groupBy(F.col(group_to).alias("id"))
-            .agg(F.sum(val).alias("r"))
-        )
-        # lazy checkpoint: the norm aggregate below is the action that
-        # materializes the truncated blocks AND returns the scalar
-        raw = checkpointed(summed, lazy=True)
-        nrm = raw.agg(F.sqrt(F.sum(F.col("r") * F.col("r")))).first()[0]
-        LAST_STATS["hits_actions"] += 1
-        out_col = "auth" if group_to == "dst" else "hub"
-        return raw.select(
-            "id", F.round(F.col("r") / F.lit(nrm), 6).alias(out_col)
-        )
-
-    for _ in range(n_iter):
-        auth = _half(hub, "hub", "src", "dst")
-        hub = _half(auth, "auth", "dst", "src")
+    parts = _adaptive_edge_parts(d.count(), edges.sparkSession)
     # every half-step state is localCheckpoint-materialized (the norm
-    # read), so the edge layouts are dead here — the final densify below
-    # reads checkpointed blocks only
-    e_auth.unpersist(blocking=False)
-    e_hub.unpersist(blocking=False)
+    # read), so the edge layouts are dead once the loop ends — the final
+    # densify below reads checkpointed blocks only
+    with layout_scope(
+        lambda: _edges_partitioned(d, "dst", parts, dedup=False)
+    ) as e_auth, layout_scope(
+        lambda: _edges_partitioned(d, "src", parts, dedup=False)
+    ) as e_hub:
+        verts = (
+            e_auth.select(F.col("src").alias("id"))
+            .union(e_auth.select("dst"))
+            .distinct()
+        )
+        verts = checkpointed(verts, lazy=True)
+        n = verts.count()  # the materializing action (r9 setup fold)
+        if n == 0:
+            return edges.sparkSession.createDataFrame(
+                [], "id long, hub double, auth double"
+            )
+        hub = verts.withColumn("hub", F.lit(1.0))
+        auth = None
+        LAST_STATS["hits_actions"] = 0
+
+        def _half(state: DataFrame, val: str, join_on: str, group_to: str):
+            """One half-step: sum ``val`` over ``join_on``-matched edges onto
+            ``group_to`` endpoints, L2-normalize, round 6 dp — one action,
+            sparse state (absent id ⇔ score 0). Probes the layout whose
+            partitioning key is the AGGREGATE key (``group_to``) so the keyed
+            sum needs no exchange."""
+            e = e_auth if group_to == "dst" else e_hub
+            summed = (
+                e.join(_state_hinted(state, n), F.col(join_on) == state["id"])
+                .groupBy(F.col(group_to).alias("id"))
+                .agg(F.sum(val).alias("r"))
+            )
+            # lazy checkpoint: the norm aggregate below is the action that
+            # materializes the truncated blocks AND returns the scalar
+            raw = checkpointed(summed, lazy=True)
+            nrm = raw.agg(F.sqrt(F.sum(F.col("r") * F.col("r")))).first()[0]
+            LAST_STATS["hits_actions"] += 1
+            out_col = "auth" if group_to == "dst" else "hub"
+            return raw.select(
+                "id", F.round(F.col("r") / F.lit(nrm), 6).alias(out_col)
+            )
+
+        for _ in range(n_iter):
+            auth = _half(hub, "hub", "src", "dst")
+            hub = _half(auth, "auth", "dst", "src")
     # densify ONCE: zero-out-degree vertices carry hub 0, zero-in-degree
     # vertices auth 0 — identical to the r7 per-half-step left joins
     return (

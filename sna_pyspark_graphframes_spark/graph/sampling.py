@@ -251,7 +251,7 @@ def sample_graph(
     # ``registry._lpa_labels`` — shouldn't pay the 5-superstep loop twice);
     # the split/re-key normalization below still applies either way.
     if labels is None:
-        labels = label_propagation(sym, max_iter=max_iter, assume_symmetric=True)
+        labels = label_propagation(sym, max_iter=max_iter, sym_layout=sym)
     if max_community_size is not None:
         labels = split_oversized_communities(labels, max_community_size, seed)
     labels = dense_rekey(labels).cache()

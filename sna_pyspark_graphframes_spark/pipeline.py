@@ -102,11 +102,17 @@ def measure(edges: DataFrame, exact_paths: bool = False) -> GraphReport:
 
     ``exact_paths=True`` adds the all-pairs metrics (betweenness, closeness,
     diameter) — O(V·E), fixture/small-graph scale only; at 100 TB pass
-    sampled landmarks through ``algorithms`` directly instead."""
-    canonical = build.canonical_edges(edges).cache()
-    deg = metrics.degrees(canonical).cache()
-    tri = metrics.triangles_per_vertex(canonical, deg=deg)
-    return _report(deg, tri, canonical if exact_paths else None)
+    sampled landmarks through ``algorithms`` directly instead. Degrees
+    and triangles come from ``metrics.triangle_basis``, the plan
+    ``run_pipeline``'s reports read."""
+    basis = metrics.triangle_basis(
+        checkpointed(build.symmetrize(edges, dedup=True))
+    )
+    return _report(
+        basis.deg,
+        basis.tri,
+        build.canonical_edges(edges) if exact_paths else None,
+    )
 
 
 def _run(

@@ -1,4 +1,4 @@
-"""Iteration hygiene for DataFrame-loop algorithms.
+"""Iteration hygiene and the shared superstep pieces of the DataFrame loops.
 
 Iterative algorithms (LPA, connected components, BFS) re-derive a DataFrame
 from itself each round; without truncation the Catalyst plan doubles per
@@ -11,14 +11,34 @@ correct for local mode and acceptable on clusters with reliable executors;
 flip ``eager_reliable=True`` (+ ``spark.sparkContext.setCheckpointDir``)
 for fault-tolerant checkpoints on a real 1000-executor run where
 recomputing 50 iterations on executor loss is worse than the HDFS write.
+
+Two pieces of the superstep loop live here, so each loop in
+``graph/algorithms.py`` states only its vertex program:
+
+* ``frontier_supersteps`` — the delta-propagating round: the step
+  returns the next state with a 0/1 ``chg`` column, one job checkpoints
+  it and reads Σ``chg``, the changed rows are the next frontier, and the
+  loop stops at an empty frontier or ``max_iter``. Used by
+  ``connected_components`` (min over neighbours), ``label_propagation``
+  (mode, with its dense/frontier gate), ``weighted_sssp`` (min-plus),
+  ``widest_path`` (max-min) and the forward pass of
+  ``strongly_connected_components`` (min along arcs).
+* ``layout_scope`` — the lifetime of a loop's persisted edge layout: a
+  caller's shared layout passes through untouched, an own layout is
+  unpersisted on every exit (normal end, early return, exception). Used
+  by CC, LPA, the PageRank loop, eigenvector, MIS, katz, label spreading
+  and HITS.
 """
 
 from __future__ import annotations
 
 import itertools
 import os
+from contextlib import contextmanager
+from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 # Loop-body plan capture (r15, VERDICT r14 Next #5): the per-round frames
 # of the iterative algorithms execute inside collect()/count() actions and
@@ -66,3 +86,52 @@ def checkpointed(
     if eager_reliable:
         return df.checkpoint(eager=not lazy)
     return df.localCheckpoint(eager=not lazy)
+
+
+def frontier_supersteps(
+    state: DataFrame,
+    n_frontier: int,
+    max_iter: int,
+    step: Callable[[DataFrame, DataFrame, int], DataFrame],
+) -> tuple[DataFrame, int]:
+    """Run ``step(state, frontier, n_frontier)`` to a fixed point or
+    ``max_iter`` rounds; return ``(final state, rounds run)``.
+
+    The first frontier is ``state`` itself (``n_frontier`` rows), so
+    every initial value is proposed once. ``step`` returns the next state
+    with a 0/1 ``chg`` column; its lazy checkpoint is materialized by the
+    Σ``chg`` read, so a round costs ONE job (the convergence fold,
+    VERDICT r3 #3; ADVICE r4: a separate changed-count join and action
+    per round measured 2.3x slower on CC). The changed rows, without
+    ``chg``, are the next frontier; why that frontier is exact is the
+    step's argument (an idempotent merge for min/max, the unchanged
+    histogram for LPA's mode). The returned state has no ``chg`` column;
+    after one round or more it is materialized."""
+    frontier, rounds = state, 0
+    while rounds < max_iter:
+        rounds += 1
+        nxt = checkpointed(step(state, frontier, n_frontier), lazy=True)
+        n_frontier = int(nxt.agg(F.sum("chg")).first()[0] or 0)
+        frontier = nxt.filter(F.col("chg") == 1).drop("chg")
+        state = nxt.drop("chg")
+        if not n_frontier:
+            break
+    return state, rounds
+
+
+@contextmanager
+def layout_scope(
+    build: Callable[[], DataFrame], shared: DataFrame | None = None
+) -> Iterator[DataFrame]:
+    """Yield ``shared`` untouched when the caller holds the layout (its
+    lifetime is the caller's); otherwise yield ``build()`` and unpersist
+    it on every exit — normal end, early return or exception. The body
+    must materialize whatever it returns before leaving the scope."""
+    if shared is not None:
+        yield shared
+        return
+    layout = build()
+    try:
+        yield layout
+    finally:
+        layout.unpersist(blocking=False)

@@ -17,7 +17,10 @@ import argparse
 import os
 import sys
 
-os.environ.setdefault("SPARK_DRIVER_MEMORY", "16g")
+# Driver heap: half the host's physical memory, capped at 16g (a fixed
+# 16g exceeds the RAM of smaller hosts); an explicit env value wins.
+_HALF_RAM_MB = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 21
+os.environ.setdefault("SPARK_DRIVER_MEMORY", f"{min(_HALF_RAM_MB, 16384)}m")
 
 
 def main() -> int:

@@ -24,7 +24,10 @@ import gc
 import os
 import time
 
-os.environ.setdefault("SPARK_DRIVER_MEMORY", "16g")
+# Driver heap: half the host's physical memory, capped at 16g (a fixed
+# 16g exceeds the RAM of smaller hosts); an explicit env value wins.
+_HALF_RAM_MB = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 21
+os.environ.setdefault("SPARK_DRIVER_MEMORY", f"{min(_HALF_RAM_MB, 16384)}m")
 
 from sna_pyspark_graphframes_spark import registry  # noqa: E402
 from sna_pyspark_graphframes_spark.session import get_spark  # noqa: E402
